@@ -4,7 +4,8 @@ Nothing here changes the package. Each op runs under its own job group;
 job, stage and task counts come from the status tracker, stage CPU, GC,
 shuffle and spill from the Spark UI REST API on localhost, and py4j round
 trips from a counting wrapper around the gateway client's
-``send_command``. The py4j count includes background calls, so it is
+``send_command``. After each op, the persisted RDDs and temporary views it
+left behind are counted. The py4j count includes background calls, so it is
 approximate (about ±10% run to run).
 
 With tracing off every method is a no-op, so an untraced run executes the
@@ -63,6 +64,11 @@ class Tracer:
                 if info is not None:
                     stages.extend(info.stageIds)
             rec["stage_ids"] = sorted(set(stages))
+            # State the op leaves behind, counted before the next op's
+            # clearCache() can release it.
+            rec["rdds_left"] = self.sc._jsc.getPersistentRDDs().size()
+            rec["views_left"] = sum(1 for t in self.spark.catalog.listTables()
+                                    if t.isTemporary)
             self.sc.setJobGroup("perfbench-idle", "idle")
             self.ops.append(rec)
             self.collect_s += time.perf_counter() - t0
@@ -116,13 +122,4 @@ class Tracer:
             "shuffle_write_mb": sum(r["shuffleWriteBytes"] for r in done) / mb,
             "spill_mb": sum(r["memoryBytesSpilled"] + r["diskBytesSpilled"]
                             for r in done) / mb,
-        }
-
-    def leftover_state(self) -> dict:
-        """State a run leaves behind after ``clearCache()``."""
-        self.spark.catalog.clearCache()
-        return {
-            "persisted_rdds_left": self.sc._jsc.getPersistentRDDs().size(),
-            "temp_views_left": sum(1 for t in self.spark.catalog.listTables()
-                                   if t.isTemporary),
         }

@@ -25,7 +25,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 CPUS = 4
 
-END_TO_END = {"setup_s": "s", "op_p50_s": "s", "op_mean_s": "s", "op_cpu_s": "s"}
+END_TO_END = {"setup_s": "s", "op_mean_s": "s", "op_cpu_s": "s"}
 
 
 def per_layer_units() -> dict[str, str]:
@@ -44,13 +44,14 @@ def per_layer_units() -> dict[str, str]:
         "streaming.merge_s": "s", "sinks.staging_bytes_per_row": "B",
         "sinks.raw_bytes_per_row": "B", "elt.jobs_per_batch": "count",
         "elt.tasks_per_batch": "count", "elt.upsert_ratio": "ratio",
-        "elt.rows_per_s": "1/s", "elt.base_load_s": "s", "trace.collector_s": "s",
-        "peak_rss_mb": "MB",
+        "elt.rows_per_s": "1/s", "elt.base_load_s": "s", "elt.warmup_last_s": "s",
+        "trace.collector_s": "s", "peak_rss_mb": "MB",
     }
     for q in MART_QUERIES:
         units[f"q.{q}.build_s"] = "s"
         units[f"q.{q}.exec_s"] = "s"
         units[f"q.{q}.jobs"] = "count"
+        units[f"q.{q}.rdds_left"] = "count"
     return units
 
 
@@ -189,7 +190,6 @@ def measure(args, work: str) -> int:
         layers["elt.rows_per_s"] = run.rows_offered / sum(times)
     values = {
         "setup_s": (t1 - t0) + run.setup_s,
-        "op_p50_s": statistics.median(times),
         "op_mean_s": sum(times) / len(times),
         "op_cpu_s": run.cpu_s / len(times),
     }
@@ -203,7 +203,7 @@ def measure(args, work: str) -> int:
     host = {"cpus": os.cpu_count(), "spark_cores": CPUS, "python_loop_s": round(host_speed, 4),
             "steal_pct": 100.0 * (d[7] if len(d) > 7 else 0) / max(1, sum(d)),
             "loadavg_start": load0, "loadavg_end": os.getloadavg()[0],
-            "ops": attempted, "failed_ops": failed,
+            "ops": attempted, "failed_ops": failed, "op_p50_s": statistics.median(times),
             "failed_op_frac": failed / attempted,
             "peak_rss_mb": round(layers["peak_rss_mb"], 1),
             "end_to_end": {k: round(v, 6) for k, v in values.items()}}
@@ -243,8 +243,9 @@ def traced_layers(tracer, run) -> dict[str, float]:
         "exec.shuffle_write_mb": stage["shuffle_write_mb"] / n,
         "exec.spill_mb": stage["spill_mb"] / n,
         "trace.collector_s": tracer.collect_s / n,
+        "mat.persisted_rdds_left": sum(op["rdds_left"] for op in ops) / n,
+        "mat.temp_views_left": sum(op["views_left"] for op in ops) / n,
     }
-    out.update({f"mat.{k}": v for k, v in tracer.leftover_state().items()})
     for key, vals in tracer.timers.items():
         if key.startswith(("q.", "sheets.", "elt.", "staging.", "streaming.")):
             out[key] = statistics.median(vals)

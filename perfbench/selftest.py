@@ -1,6 +1,6 @@
 """Self-tests of the benchmark itself (not of the package).
 
-    python3 perfbench/selftest.py           # all checks, about 2 minutes
+    python3 perfbench/selftest.py           # all checks, about 3 minutes
     python3 perfbench/selftest.py --quick   # generator and parser checks only
 
 1. The generators are deterministic: the same seed gives the same inputs,

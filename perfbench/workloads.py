@@ -19,13 +19,19 @@ from decimal import Decimal
 import sheetgen
 import tablegen
 
-SETUP_REPS = 3  # set-up repetitions per run; setup_s takes their median
+SETUP_REPS = 3  # mart_queries set-up repetitions; setup_s takes their median
 
-# elt_incremental: a base sheet loaded during set-up, then delta batches
-ELT_BASE_ROWS = 1_000
+# elt_incremental: a base sheet loaded during set-up, then delta batches of
+# about 2% new rows. The first batches after the base load are slower while
+# the JVM compiles the batch path (measured on 4 cores: 9.5, 7.5, 6.7, 6.4,
+# 6.1, 5.9 s, then 5.2-5.7 s), so ELT_WARMUP_BATCHES untimed batches run on
+# the same root first. Two more would reach the flat but make every run
+# ~12 s longer; perfbench/README.md has the trade-off.
+ELT_BASE_ROWS = 20_000
 ELT_NEW_ROWS = 400
 ELT_NOPK_EDITS = 40
 ELT_PK_EDITS = 20
+ELT_WARMUP_BATCHES = 4
 ELT_MIN_BATCHES = 2
 
 # mart_queries: the paper's marts and ELT views plus a TPC-H join chain and
@@ -85,7 +91,16 @@ def elt_incremental(ctx) -> Run:
     spark, tr, run = ctx.spark, ctx.tracer, Run()
     work = ctx.work
 
-    def load(path: str, root: str) -> tuple[int, int, float, float]:
+    stream = sheetgen.SheetStream(ctx.seed, ELT_BASE_ROWS)
+    root = _fresh(f"{work}/elt")
+
+    def write(values: dict, name: str) -> str:
+        path = f"{work}/{name}.json"
+        with open(path, "w") as f:
+            json.dump(values, f, ensure_ascii=False)
+        return path
+
+    def load(path: str) -> tuple[int, int, float, float]:
         t0 = time.perf_counter()
         loaded = cli.run_load_sheets("perfbench", "Sheet1!A:AF", values_json=path,
                                      raw_dir=f"{root}/raw")
@@ -93,42 +108,45 @@ def elt_incremental(ctx) -> Run:
         upserted = cli.run_incremental_elt(f"{root}/raw", f"{root}/staging")
         return loaded, upserted, t1 - t0, time.perf_counter() - t1
 
-    # Set-up, repeated: the base sheet into fresh raw/staging directories.
-    # The repetitions also warm the JIT on the code paths the batches use.
-    setup = []
-    for rep in range(SETUP_REPS):
-        stream = sheetgen.SheetStream(ctx.seed, ELT_BASE_ROWS)
-        path = f"{work}/base{rep}.json"
-        with open(path, "w") as f:
-            json.dump(stream.base(), f, ensure_ascii=False)
-        root = _fresh(f"{work}/elt{rep}")
+    def next_batch(k: int) -> tuple[str, int]:
+        values = stream.batch(new_rows=ELT_NEW_ROWS, nopk_edits=ELT_NOPK_EDITS,
+                              pk_edits=ELT_PK_EDITS)
+        return write(values, f"batch{k}"), len(values["values"]) - 1
+
+    # Set-up: the base sheet, then untimed warm-up batches on the same root.
+    # Input generation stays outside the measured time.
+    path = write(stream.base(), "base")
+    spark.catalog.clearCache()
+    t0 = time.perf_counter()
+    load(path)
+    base_s = time.perf_counter() - t0
+    warmup = []
+    for k in range(ELT_WARMUP_BATCHES):
+        path, _ = next_batch(k)
         spark.catalog.clearCache()
         t0 = time.perf_counter()
-        load(path, root)
-        setup.append(time.perf_counter() - t0)
-    run.setup_s = statistics.median(setup)
-    run.layers["elt.base_load_s"] = run.setup_s
-    run.layers["session.warmup_s"] = sum(setup[1:])
-    log(f"base loads {[round(s, 2) for s in setup]}")
+        load(path)
+        warmup.append(time.perf_counter() - t0)
+    run.setup_s = base_s + sum(warmup)
+    run.layers["elt.base_load_s"] = base_s
+    run.layers["session.warmup_s"] = sum(warmup)
+    run.layers["elt.warmup_last_s"] = warmup[-1]
+    log(f"base load {base_s:.2f} s, warm-up batches {[round(s, 2) for s in warmup]}")
 
     if tr.on:
         _instrument_elt(tr, staging_mod, incr_mod)
 
     t_start, cpu0 = time.perf_counter(), ctx.cpu_s()
-    k = 0
-    while k < ELT_MIN_BATCHES or time.perf_counter() - t_start < ctx.seconds:
-        values = stream.batch(new_rows=ELT_NEW_ROWS, nopk_edits=ELT_NOPK_EDITS,
-                              pk_edits=ELT_PK_EDITS)
-        path = f"{work}/batch{k}.json"
-        with open(path, "w") as f:
-            json.dump(values, f, ensure_ascii=False)
-        offered = len(values["values"]) - 1
+    k = ELT_WARMUP_BATCHES
+    while (k - ELT_WARMUP_BATCHES < ELT_MIN_BATCHES
+           or time.perf_counter() - t_start < ctx.seconds):
+        path, offered = next_batch(k)
         spark.catalog.clearCache()
         ok = True
         with tr.op("elt.batch") as rec:
             t0 = time.perf_counter()
             try:
-                _, upserted, t_load, t_elt = load(path, root)
+                _, upserted, t_load, t_elt = load(path)
             except Exception as e:  # noqa: BLE001 - a failed op is counted
                 ok = False
                 run.check_errors.append(("elt.batch", f"{type(e).__name__}: {e}"[:300]))
@@ -271,6 +289,7 @@ def mart_queries(ctx) -> Run:
                 tr.add(f"q.{name}.build_s", t1 - t0)
                 tr.add(f"q.{name}.exec_s", t3 - t2)
                 tr.add(f"q.{name}.jobs", rec["jobs"])
+                tr.add(f"q.{name}.rdds_left", rec["rdds_left"])
                 tr.add("plans.build_s", t1 - t0)
                 tr.add("plans.build_jobs", build_jobs)
                 tr.add("plans.py4j_calls", rec["py4j"])
