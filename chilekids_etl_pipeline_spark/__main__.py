@@ -113,23 +113,20 @@ def run_incremental_elt(
     if os.path.exists(quarantine_dir):
         quarantined = spark.read.parquet(quarantine_dir).select("payload_hash")
         changed = changed.join(quarantined, "payload_hash", "left_anti")
-    changed = changed.orderBy("extracted_at", "id")
     if limit:
-        changed = changed.limit(limit)
-    # the ordered slice is tiny (or the full incremental delta); pin it so
-    # the two passes below (count + upsert) don't recompute the anti-join
-    changed = changed.persist()
-    n_changed = changed.count()
+        # --test takes the FIRST changed records (transform.py:233 ORDER BY
+        # extracted_at, id). Only the limit needs that order: the upsert
+        # picks winners per key by (received_at, payload_hash), so a full
+        # run skips the global sort (a range-sampling job plus a shuffle).
+        changed = changed.orderBy("extracted_at", "id").limit(limit)
     t_query = time.time() - start
-    if n_changed == 0:
-        logger.info("no new records found; done")
-        changed.unpersist()
-        return 0
-    logger.info("found %d changed records (%.1fs)", n_changed, t_query)
 
     # 2. normalize (src/transform.py:18-197): one codegen projection over
     #    the payload column; parse failures become flag columns, and the
-    #    reference's per-record rejection is the parse_failed_cols filter
+    #    reference's per-record rejection is the parse_failed_cols filter.
+    #    Pinned, because three passes read it: the aggregate below, the
+    #    quarantine write and the upsert; the delta itself is not pinned —
+    #    its only pass is the one that fills this cache.
     t0 = time.time()
     normalized = normalize_staging(changed, payload_col="payload").select(
         F.col("id").alias("raw_id"),
@@ -141,76 +138,69 @@ def run_incremental_elt(
         "financial_missing_total",
         "parse_failed_cols",
     ).persist()
-    n_errors = normalized.filter(F.col("parse_failed_cols") != "").count()
-    n_norm = normalized.count()
-    t_norm = time.time() - t0
-    logger.info("normalized %d (errors: %d) in %.1fs", n_norm, n_errors, t_norm)
-    if n_changed and n_errors / n_changed > ERROR_RATE_WARN:
-        logger.warning(
-            "high error rate: %.1f%% (%d/%d)",
-            100 * n_errors / n_changed, n_errors, n_changed,
+    failed = F.col("parse_failed_cols") != ""
+    try:
+        # one aggregate gives the changed count (normalization is 1:1),
+        # the error count and the empty-delta exit
+        n_changed, n_errors = normalized.agg(
+            F.count(F.lit(1)), F.count(F.when(failed, 1))
+        ).first()
+        t_norm = time.time() - t0
+        if n_changed == 0:
+            logger.info("no new records found; done")
+            return 0
+        logger.info(
+            "found and normalized %d changed records (errors: %d) in %.1fs",
+            n_changed, n_errors, time.time() - start,
         )
-
-    # 3. test-mode examples (main.py:106-110)
-    if test_mode:
-        logger.info("--- example records (first 3) ---")
-        for i, rec in enumerate(normalized.limit(3).collect(), 1):
-            logger.info(
-                "record %d: %s | %s rub | %s",
-                i, rec["client"], rec["total_rub"], rec["category"],
-            )
-
-    # 4. upsert (src/transform.py:240-346): last-write-wins keyed merge
-    #    into the staging parquet target. Only clean rows go in — the
-    #    reference drops records that fail normalization (transform.py's
-    #    per-record except -> continue), so rows with parse_failed_cols
-    #    are routed to a quarantine parquet beside the target instead of
-    #    becoming permanent staging rows (the payload_hash anti-join
-    #    would otherwise never re-offer them).
-    t0 = time.time()
-    clean = normalized.filter(F.col("parse_failed_cols") == "")
-    if n_errors:
-        normalized.filter(F.col("parse_failed_cols") != "").write.mode(
-            "append"
-        ).parquet(quarantine_dir)
-        logger.warning(
-            "quarantined %d records with parse failures to %s",
-            n_errors, quarantine_dir,
-        )
-    n_upserted = n_norm - n_errors
-    if n_upserted:
-        merge = merge_upsert_batch(
-            staging_dir,
-            key_col="raw_id",
-            order_cols=("received_at", "payload_hash"),
-            sink_id="cli",
-        )
-        # Strictly increasing batch id: wall-clock seconds alone collide
-        # when two CLI runs start within the same second, and the replay
-        # guard (incremental.py: applied >= batch_id) would silently skip
-        # the second run. Outrank whatever the target has already applied.
-        batch_id = int(time.time())
-        if os.path.exists(staging_dir):
-            cur = spark.read.parquet(staging_dir)
-            # Bump whenever _batch_id exists at all: a pre-_sink_id-layout
-            # target still gets _sink_id injected inside _merge, so its
-            # replay guard (applied >= batch_id) would silently skip a
-            # same-second rerun if we only bumped on the new layout.
-            if "_batch_id" in cur.columns:
-                if "_sink_id" in cur.columns:
-                    cur = cur.filter(F.col("_sink_id") == "cli")
-                applied = cur.agg(F.max("_batch_id")).first()[0]
-                if applied is not None:
-                    batch_id = max(batch_id, int(applied) + 1)
-        applied_ok = merge(clean, batch_id)
-        if applied_ok is False:
+        if n_errors / n_changed > ERROR_RATE_WARN:
             logger.warning(
-                "batch %d was NOT applied (replay guard skipped it)",
-                batch_id,
+                "high error rate: %.1f%% (%d/%d)",
+                100 * n_errors / n_changed, n_errors, n_changed,
             )
-    t_upsert = time.time() - t0
-    changed.unpersist()
-    normalized.unpersist()
+
+        # 3. test-mode examples (main.py:106-110)
+        if test_mode:
+            logger.info("--- example records (first 3) ---")
+            for i, rec in enumerate(normalized.limit(3).collect(), 1):
+                logger.info(
+                    "record %d: %s | %s rub | %s",
+                    i, rec["client"], rec["total_rub"], rec["category"],
+                )
+
+        # 4. upsert (src/transform.py:240-346): last-write-wins keyed merge
+        #    into the staging parquet target. Only clean rows go in — the
+        #    reference drops records that fail normalization (transform.py's
+        #    per-record except -> continue), so rows with parse_failed_cols
+        #    are routed to a quarantine parquet beside the target instead of
+        #    becoming permanent staging rows (the payload_hash anti-join
+        #    would otherwise never re-offer them).
+        t0 = time.time()
+        if n_errors:
+            normalized.filter(failed).write.mode("append").parquet(
+                quarantine_dir
+            )
+            logger.warning(
+                "quarantined %d records with parse failures to %s",
+                n_errors, quarantine_dir,
+            )
+        n_upserted = n_changed - n_errors
+        if n_upserted:
+            merge = merge_upsert_batch(
+                staging_dir,
+                key_col="raw_id",
+                order_cols=("received_at", "payload_hash"),
+                sink_id="cli",
+            )
+            # batch_id=None: the merge picks an id past whatever this sink
+            # has applied, so two runs within one wall-clock second both
+            # apply instead of the second being skipped as a replay
+            merge(normalized.filter(~failed), None)
+        t_upsert = time.time() - t0
+    finally:
+        # also on failure: a raising write or merge must not leave the
+        # batch pinned in a long-lived session
+        normalized.unpersist()
 
     logger.info("=== summary ===")
     logger.info(
@@ -238,7 +228,8 @@ def run_load_sheets(
     from pyspark.sql import functions as F
 
     from .sources.sheets import (
-        fetch_google_sheets, records_to_raw_df, values_to_records,
+        fetch_google_sheets, raw_rows_to_df, records_to_raw_rows,
+        values_to_records,
     )
 
     spark = _get_spark()
@@ -259,25 +250,30 @@ def run_load_sheets(
             fetch_google_sheets(spreadsheet_id, range_name)
         )
     logger.info("got %d rows; loading into raw", len(records))
-    df = records_to_raw_df(spark, records, source)
-    n_dups = df.count() - df.select("payload_hash").distinct().count()
+    rows = records_to_raw_rows(records, source)
+    # the rows are hashed in driver memory already: count duplicates there
+    n_dups = len(rows) - len({r[3] for r in rows})
     if n_dups:
         logger.warning(
             "found %d duplicate content hashes; add a unique ID column "
             "to the sheet", n_dups,
         )
     if os.path.exists(raw_dir):
-        existing = spark.read.parquet(raw_dir).select("id")
-        fresh = df.join(existing, "id", "left_anti")  # ON CONFLICT DO NOTHING
-        # pin the anti-join BEFORE appending to raw_dir: counting after the
-        # write would re-run it against the directory the write just grew
-        fresh = fresh.persist()
-        n = fresh.count()
-        fresh.write.mode("append").parquet(raw_dir)
-        fresh.unpersist()
+        # ON CONFLICT (id) DO NOTHING: one semi-join against the sheet's
+        # broadcast ids finds which of them raw already holds; the rest are
+        # appended straight from driver memory, so their count is exact
+        # without pinning a join or re-running it against the grown dir.
+        ids = spark.createDataFrame([(r[0],) for r in rows], "id string")
+        held = {
+            r.id for r in spark.read.parquet(raw_dir).select("id")
+            .join(F.broadcast(ids), "id", "left_semi").collect()
+        }
+        rows = [r for r in rows if r[0] not in held]
+        if rows:
+            raw_rows_to_df(spark, rows).write.mode("append").parquet(raw_dir)
     else:
-        df.write.mode("overwrite").parquet(raw_dir)
-        n = df.count()
+        raw_rows_to_df(spark, rows).write.mode("overwrite").parquet(raw_dir)
+    n = len(rows)
     logger.info("loaded %d rows into %s", n, raw_dir)
     return n
 

@@ -31,8 +31,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def _cleaned(col: str) -> tuple[str, str]:
-    """Return (negativity-test SQL, cleaned-digits SQL) for a string col."""
+def cleaned_parts_sql(col: str) -> tuple[str, str]:
+    """(negativity-test SQL, cleaned-digits SQL) for a string column."""
     s0 = f"trim({col})"
     neg = f"({s0} LIKE '(%' AND {s0} LIKE '%)')"
     s1 = f"CASE WHEN {neg} THEN trim(substr({s0}, 2, length({s0}) - 2)) ELSE {s0} END"
@@ -43,78 +43,27 @@ def _cleaned(col: str) -> tuple[str, str]:
     return neg, s2
 
 
-def money_sql(col: str, scale: int = 4, dialect: str = "spark") -> str:
-    """SQL expr parsing a messy money string → decimal(18, scale) or NULL.
+def money_from_parts_sql(
+    raw_col: str, neg_col: str, s2_col: str, scale: int = 4, dialect: str = "spark"
+) -> str:
+    """Money parse from the raw string and its cleaned parts (see
+    ``cleaned_parts_sql``): SQL text or attribute references of a staged
+    projection.
 
     The Spark form extracts the after-last-separator tail with
     ``substring_index`` (plain string scan); the DuckDB twin uses a greedy
     regex — Java's regex engine is ~10x the cost of a scan and this runs
     per value per row in the hot path.
     """
-    neg, s2 = _cleaned(col)
-    has_dot = f"({s2} LIKE '%.%')"
-    has_comma = f"({s2} LIKE '%,%')"
-    if dialect == "spark":
-        tail_dot = f"substring_index({s2}, '.', -1)"
-        tail_comma = f"substring_index({s2}, ',', -1)"
-    else:
-        # greedy '^.*X' strips through the LAST X → tail after last separator
-        tail_dot = f"regexp_replace({s2}, '^.*[.]', '')"
-        tail_comma = f"regexp_replace({s2}, '^.*[,]', '')"
-    comma_count = f"(length({s2}) - length(replace({s2}, ',', '')))"
-    fixed = f"""CASE
-        WHEN {has_dot} AND {has_comma} THEN
-            CASE WHEN length({tail_dot}) < length({tail_comma})
-                 THEN replace({s2}, ',', '')
-                 ELSE replace(replace({s2}, '.', ''), ',', '.') END
-        WHEN {has_comma} THEN
-            CASE WHEN {comma_count} = 1 AND length({tail_comma}) <= 3
-                 THEN replace({s2}, ',', '.')
-                 ELSE replace({s2}, ',', '') END
-        ELSE {s2} END"""
-    parsed = f"try_cast({fixed} AS decimal(18, {scale}))"
-    return f"""CASE
-        WHEN {col} IS NULL OR trim({col}) = '' OR {s2} = '' THEN NULL
-        WHEN {neg} THEN -({parsed})
-        ELSE {parsed} END"""
-
-
-def int_sql(col: str, dialect: str = "spark") -> str:
-    """SQL expr: messy string → BIGINT, truncating toward zero.
-
-    floor/ceil instead of a direct cast because DuckDB rounds on
-    decimal→int casts while Spark truncates (reference truncates,
-    src/transform.py:89-105).
-    """
-    d = money_sql(col, scale=4, dialect=dialect)
-    return f"""CASE WHEN ({d}) IS NULL THEN NULL
-        WHEN ({d}) >= 0 THEN cast(floor({d}) AS bigint)
-        ELSE cast(ceil({d}) AS bigint) END"""
-
-
-# --- staged (part-wise) builders ------------------------------------------
-#
-# money_sql/int_sql inline their cleaned-string subexpression at every
-# occurrence (SQL has no let-binding), which is fine for a handful of
-# columns but blows the whole-stage-codegen method size past janino's
-# limits on a 41-column projection (observed: compile failure → interpreted
-# fallback, ~70x slower). The staged form materializes each reused piece as
-# its own column so later stages reference a cheap attribute; Catalyst
-# keeps the stages separate because the pieces are non-trivial and
-# multiply-referenced.
-
-
-def cleaned_parts_sql(col: str) -> tuple[str, str]:
-    """(negativity-test SQL, cleaned-digits SQL) — stage these as columns."""
-    return _cleaned(col)
-
-
-def money_from_parts_sql(raw_col: str, neg_col: str, s2_col: str, scale: int = 4) -> str:
-    """money parse given pre-staged cleaned parts (attribute references)."""
     has_dot = f"({s2_col} LIKE '%.%')"
     has_comma = f"({s2_col} LIKE '%,%')"
-    tail_dot = f"substring_index({s2_col}, '.', -1)"
-    tail_comma = f"substring_index({s2_col}, ',', -1)"
+    if dialect == "spark":
+        tail_dot = f"substring_index({s2_col}, '.', -1)"
+        tail_comma = f"substring_index({s2_col}, ',', -1)"
+    else:
+        # greedy '^.*X' strips through the LAST X → tail after last separator
+        tail_dot = f"regexp_replace({s2_col}, '^.*[.]', '')"
+        tail_comma = f"regexp_replace({s2_col}, '^.*[,]', '')"
     comma_count = f"(length({s2_col}) - length(replace({s2_col}, ',', '')))"
     fixed = f"""CASE
         WHEN {has_dot} AND {has_comma} THEN
@@ -131,6 +80,33 @@ def money_from_parts_sql(raw_col: str, neg_col: str, s2_col: str, scale: int = 4
         WHEN {raw_col} IS NULL OR trim({raw_col}) = '' OR {s2_col} = '' THEN NULL
         WHEN {neg_col} THEN -({parsed})
         ELSE {parsed} END"""
+
+
+def money_sql(col: str, scale: int = 4, dialect: str = "spark") -> str:
+    """SQL expr parsing a messy money string → decimal(18, scale) or NULL:
+    the staged template with the cleaned parts inlined."""
+    neg, s2 = cleaned_parts_sql(col)
+    return money_from_parts_sql(col, neg, s2, scale, dialect)
+
+
+def int_sql(col: str, dialect: str = "spark") -> str:
+    """SQL expr: messy string → BIGINT, truncating toward zero.
+
+    floor/ceil instead of a direct cast because DuckDB rounds on
+    decimal→int casts while Spark truncates (reference truncates,
+    src/transform.py:89-105).
+    """
+    return int_from_decimal_sql(f"({money_sql(col, scale=4, dialect=dialect)})")
+
+
+# money_sql/int_sql inline their cleaned-string subexpression at every
+# occurrence (SQL has no let-binding), which is fine for a handful of
+# columns but blows the whole-stage-codegen method size past janino's
+# limits on a 41-column projection (observed: compile failure → interpreted
+# fallback, ~70x slower). normalize_staging therefore stages each reused
+# piece as its own column (cleaned parts, then the decimal) so later stages
+# reference a cheap attribute; Catalyst keeps the stages separate because
+# the pieces are non-trivial and multiply-referenced.
 
 
 def int_from_decimal_sql(dec_col: str) -> str:

@@ -29,15 +29,12 @@ instead of silently nulling out.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from ..functions.normalize import (
     cleaned_parts_sql,
     int_from_decimal_sql,
-    int_sql,
     money_from_parts_sql,
-    money_sql,
     ts_sql_spark,
 )
 
@@ -125,41 +122,33 @@ def extract_raw_sql(payload_col: str, variants: list[str], dialect: str = "spark
     return f"coalesce({', '.join(probes)})"
 
 
-def extract_sql(payload_col: str, variants: list[str], typ: str, dialect: str = "spark") -> str:
-    """Dialect-portable extraction+parse SQL for one staging column."""
-    raw = extract_raw_sql(payload_col, variants, dialect=dialect)
-    if typ == "str":
-        return raw
-    if typ == "money":
-        return money_sql(raw, dialect=dialect)
-    if typ == "int":
-        return int_sql(raw, dialect=dialect)
-    if typ == "ts":
-        if dialect == "spark":
-            return ts_sql_spark(raw)
-        from ..functions.normalize import ts_sql_duckdb
-
-        return ts_sql_duckdb(raw)
-    raise ValueError(typ)
+def _q(name: str) -> str:
+    """Backtick-quote a column name for SQL text."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def normalize_staging(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Payload-JSON column → the full typed staging.records column set.
 
     Staged for codegen economics, not elegance: the payload is JSON-parsed
-    exactly ONCE per row (``from_json`` → map), because the naive form —
+    exactly ONCE per row (``from_json`` → struct), because the naive form —
     ``get_json_object`` inside every parser template — re-parses the
     payload at every occurrence of the extracted string inside the
     money/int/timestamp CASE trees (conditional branches defeat codegen
     subexpression elimination), which measured ~70x slower at sf0.1.
-    Key-variant lookup is then a coalesce of cheap map probes, staged in
+    Key-variant lookup is then a coalesce of cheap field probes, staged in
     its own projection so the typed parsers reference a plain attribute.
+
+    Each stage is emitted as SQL text through ONE ``selectExpr``: building
+    the same projections from ``F.expr``/``F.col``/``.alias`` Column objects
+    costs a py4j round trip per call — about 4,000 per build, which made
+    building the plan cost more than running it on a small delta.
 
     Adds ``financial_missing_total`` — the reference's validation warning
     (transform.py:190-196: financial type but no Total RUB) as a flag
     column instead of a log line, so downstream can route/alert on it.
     """
-    base_cols = [F.col(c) for c in df.columns]
+    base = [_q(c) for c in df.columns]
     # All distinct header variants as ONE struct schema: from_json parses the
     # payload against typed fields and extraction is O(1) ordinal access.
     # (A map<string,string> + element_at per variant measured 37x slower at
@@ -190,16 +179,14 @@ def normalize_staging(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     # the supported sources; the DuckDB oracle (extract_raw_sql) states the
     # same fall-through semantics, so both engines always agree.
     key_list = ", ".join(f"'{k}'" for k in keys)
-    parsed = df.withColumn(
-        "__s", F.from_json(F.col(payload_col), f"struct<{schema}>")
-    ).withColumn(
-        "__nm",
-        F.expr(
-            f"CASE WHEN size(array_except(json_object_keys({payload_col}), "
-            f"array({key_list}))) > 0 "
-            f"THEN transform_keys(from_json({payload_col}, 'map<string,string>'), "
-            "(k, v) -> lower(replace(k, ' ', ''))) END"
-        ),
+    payload = _q(payload_col)
+    parsed = df.selectExpr(
+        "*",
+        f"from_json({payload}, 'struct<{schema}>') AS __s",
+        f"CASE WHEN size(array_except(json_object_keys({payload}), "
+        f"array({key_list}))) > 0 "
+        f"THEN transform_keys(from_json({payload}, 'map<string,string>'), "
+        "(k, v) -> lower(replace(k, ' ', ''))) END AS __nm",
     )
 
     # Static cross-column aliases: enumerated keys (already struct fields)
@@ -217,72 +204,73 @@ def normalize_staging(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     # (exact variants in order, then per normalized variant: the gated
     # arbitrary-key fallback, then the static enumerated aliases — _get
     # parity in both the novel-key and the known-alias case)
-    raws: list[Column] = []
+    raws: list[str] = []
     for name, _typ, variants in STAGING_COLUMNS:
         probes = [f"__s.`{v}`" for v in variants]
         for nk in norm_variants(variants):
             probes.append(f"try_element_at(__nm, '{nk}')")
             probes += [f"__s.`{k}`" for k in _aliases(variants, nk)]
-        raws.append(F.expr(f"coalesce({', '.join(probes)})").alias(f"__r_{name}"))
-    stage1 = parsed.select(*base_cols, *raws)
+        raws.append(f"coalesce({', '.join(probes)}) AS __r_{name}")
+    stage1 = parsed.selectExpr(*base, *raws)
 
     # stage 2: cleaned parts for every numeric column (reused ~12x below)
-    numeric = [(n, t) for n, t, _ in STAGING_COLUMNS if t in ("money", "int")]
-    parts: list[Column] = [F.col(f"__r_{n}") for n, _t, _ in STAGING_COLUMNS]
-    for name, _typ in numeric:
+    numeric = [n for n, t, _ in STAGING_COLUMNS if t in ("money", "int")]
+    raw_refs = [f"__r_{n}" for n, _t, _ in STAGING_COLUMNS]
+    parts = list(raw_refs)
+    for name in numeric:
         neg, s2 = cleaned_parts_sql(f"__r_{name}")
-        parts.append(F.expr(neg).alias(f"__neg_{name}"))
-        parts.append(F.expr(s2).alias(f"__s2_{name}"))
-    stage2 = stage1.select(*base_cols, *parts)
+        parts += [f"{neg} AS __neg_{name}", f"{s2} AS __s2_{name}"]
+    stage2 = stage1.selectExpr(*base, *parts)
 
-    # stage 3: decimal parse from parts; timestamps parsed here too
-    decs: list[Column] = [F.col(f"__r_{n}") for n, _t, _ in STAGING_COLUMNS]
-    for name, _typ in numeric:
-        decs.append(
-            F.expr(
-                money_from_parts_sql(f"__r_{name}", f"__neg_{name}", f"__s2_{name}")
-            ).alias(f"__dec_{name}")
-        )
-    stage3 = stage2.select(*base_cols, *decs)
+    # stage 3: decimal parse from parts
+    decs = raw_refs + [
+        money_from_parts_sql(f"__r_{n}", f"__neg_{n}", f"__s2_{n}") + f" AS __dec_{n}"
+        for n in numeric
+    ]
+    stage3 = stage2.selectExpr(*base, *decs)
 
-    # stage 4: final typed projection (raw strings of typed cols kept for
-    # the validation stage below)
-    typed: list[Column] = list(base_cols)
-    raws_kept: list[Column] = []
+    # stage 4: final typed projection, timestamps parsed here (raw strings
+    # of typed cols kept for the validation stage below)
+    typed = list(base)
+    raws_kept: list[str] = []
     for name, typ, _variants in STAGING_COLUMNS:
         if typ == "str":
-            typed.append(F.col(f"__r_{name}").alias(name))
-        elif typ == "money":
-            typed.append(F.col(f"__dec_{name}").alias(name))
-            raws_kept.append(F.col(f"__r_{name}"))
+            typed.append(f"__r_{name} AS {_q(name)}")
+            continue
+        if typ == "money":
+            typed.append(f"__dec_{name} AS {_q(name)}")
         elif typ == "int":
-            typed.append(F.expr(int_from_decimal_sql(f"__dec_{name}")).alias(name))
-            raws_kept.append(F.col(f"__r_{name}"))
+            typed.append(f"{int_from_decimal_sql(f'__dec_{name}')} AS {_q(name)}")
         else:
-            typed.append(F.expr(ts_sql_spark(f"__r_{name}")).alias(name))
-            raws_kept.append(F.col(f"__r_{name}"))
-    stage4 = stage3.select(*typed, *raws_kept)
+            typed.append(f"{ts_sql_spark(f'__r_{name}')} AS {_q(name)}")
+        raws_kept.append(f"__r_{name}")
+    # financial_missing_total here, on the raw/decimal attributes that
+    # `type`/`total_rub` alias, rather than in stage 5: the cheap flag then
+    # collapses into this projection and the optimized plan matches the
+    # Column-built form's exactly.
+    fin = ", ".join(f"'{t}'" for t in FINANCIAL_TYPES)
+    stage4 = stage3.selectExpr(
+        *typed, *raws_kept,
+        f"(__r_type IN ({fin})) AND (__dec_total_rub IS NULL) AS financial_missing_total",
+    )
 
     # stage 5: row-level validation — the pydantic-rejection analog
     # (transform.py:185-187) as data: a typed column whose raw value was
     # present but parsed to NULL is a type violation; its name is recorded
     # in parse_failed_cols (comma-joined; '' = clean row) so downstream can
     # quarantine instead of silently ingesting nulls.
-    flags = []
-    for name, typ, _variants in STAGING_COLUMNS:
-        if typ == "str":
-            continue
-        flags.append(
-            f"CASE WHEN __r_{name} IS NOT NULL AND trim(__r_{name}) <> '' "
-            f"AND {name} IS NULL THEN '{name}' END"
-        )
+    flags = [
+        f"CASE WHEN __r_{name} IS NOT NULL AND trim(__r_{name}) <> '' "
+        f"AND {name} IS NULL THEN '{name}' END"
+        for name, typ, _variants in STAGING_COLUMNS
+        if typ != "str"
+    ]
     failed = (
         f"concat_ws(',', filter(array({', '.join(flags)}), x -> x IS NOT NULL))"
     )
-    fin = F.col("type").isin(*FINANCIAL_TYPES)
-    keep = [c for c in stage4.columns if not c.startswith("__r_")]
-    return (
-        stage4.withColumn("financial_missing_total", fin & F.col("total_rub").isNull())
-        .withColumn("parse_failed_cols", F.expr(failed))
-        .select(*keep, "financial_missing_total", "parse_failed_cols")
+    return stage4.selectExpr(
+        *base,
+        *(_q(name) for name, _t, _v in STAGING_COLUMNS),
+        "financial_missing_total",
+        f"{failed} AS parse_failed_cols",
     )

@@ -9,7 +9,7 @@ transform.py's ``_get`` implements), then ``normalize_staging`` extracts
 and types every staging column in one whole-stage-codegen projection.
 
 The DuckDB oracle is generated from the SAME column spec
-(``STAGING_COLUMNS``) through the dialect-portable ``extract_sql``, so the
+(``STAGING_COLUMNS``) through the dialect-portable ``extract_raw_sql``, so the
 test proves the full 41-column extraction+parse matrix, not a sample.
 """
 

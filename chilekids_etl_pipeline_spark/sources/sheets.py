@@ -57,7 +57,20 @@ def detect_id_key(record: dict[str, Any]) -> str | None:
 
 
 def records_to_raw_df(spark: SparkSession, records: list[dict[str, Any]], source: str = "sheets") -> DataFrame:
-    """Records → raw-layer DataFrame (id, source, payload json, payload_hash).
+    """Records → raw-layer DataFrame (id, source, payload json, payload_hash,
+    extracted_at)."""
+    return raw_rows_to_df(spark, records_to_raw_rows(records, source))
+
+
+def raw_rows_to_df(spark: SparkSession, rows: list[tuple[str, str, str, str]]) -> DataFrame:
+    """``records_to_raw_rows`` output → raw-layer DataFrame, stamped with
+    extraction time."""
+    df = spark.createDataFrame(rows, "id string, source string, payload string, payload_hash string")
+    return df.withColumn("extracted_at", F.current_timestamp())
+
+
+def records_to_raw_rows(records: list[dict[str, Any]], source: str = "sheets") -> list[tuple[str, str, str, str]]:
+    """Records → raw-layer rows ``(id, source, payload json, payload_hash)``.
 
     Hashing runs driver-side here because the payload is already local (a
     sheet is small); the distributed path for bulk data is
@@ -73,8 +86,7 @@ def records_to_raw_df(spark: SparkSession, records: list[dict[str, Any]], source
         else:
             raw_id = f"sheet_auto_{h[:12]}_{i}"
         rows.append((raw_id, source, payload_str, h))
-    df = spark.createDataFrame(rows, "id string, source string, payload string, payload_hash string")
-    return df.withColumn("extracted_at", F.current_timestamp())
+    return rows
 
 
 def load_sheet_values(spark: SparkSession, path: str, source: str = "sheets") -> DataFrame:

@@ -116,13 +116,19 @@ def merge_upsert_batch(
     window dedup below is exactly the shuffle MERGE performs on the key).
     Within one batch, ``order_cols`` (descending) pick the winner per
     key; across batches the newer batch wins.
+
+    ``batch_id=None`` is the single-writer form (the CLI): the batch gets
+    the wall-clock second, or the id after the highest this sink has
+    applied if that is larger, read in the same ``max(_batch_id)`` lookup
+    the replay guard makes, and is always applied.
     """
     import os
     import shutil
+    import time
 
     from pyspark.sql import Window
 
-    def _merge(batch: DataFrame, batch_id: int) -> bool:
+    def _merge(batch: DataFrame, batch_id: int | None) -> bool:
         spark = batch.sparkSession
         tmp = target_dir + ".tmp"
         old = target_dir + ".old"
@@ -131,9 +137,7 @@ def merge_upsert_batch(
             os.rename(old, target_dir)
         shutil.rmtree(old, ignore_errors=True)
         shutil.rmtree(tmp, ignore_errors=True)
-        stamped = batch.withColumn("_batch_id", F.lit(int(batch_id))).withColumn(
-            "_sink_id", F.lit(sink_id)
-        )
+        cur = applied = None
         if os.path.exists(target_dir):
             cur = spark.read.parquet(target_dir)
             if "_sink_id" not in cur.columns:  # pre-sink_id target layout
@@ -143,11 +147,16 @@ def merge_upsert_batch(
                 .agg(F.max("_batch_id"))
                 .first()[0]
             )
-            if applied is not None and applied >= batch_id:
-                return False  # replayed batch for THIS sink: already absorbed
-            merged = cur.unionByName(stamped)
-        else:
-            merged = stamped
+        if batch_id is None:  # single-writer form: never a replay
+            batch_id = int(time.time())
+            if applied is not None:
+                batch_id = max(batch_id, int(applied) + 1)
+        elif applied is not None and applied >= batch_id:
+            return False  # replayed batch for THIS sink: already absorbed
+        stamped = batch.withColumn("_batch_id", F.lit(int(batch_id))).withColumn(
+            "_sink_id", F.lit(sink_id)
+        )
+        merged = stamped if cur is None else cur.unionByName(stamped)
         # Batch ids are only ordered WITHIN a sink lifetime; rows inherited
         # from a previous checkpoint/sink may carry arbitrarily high ids,
         # so the current writer outranks them first, then id, then payload

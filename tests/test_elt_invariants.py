@@ -1,0 +1,196 @@
+"""Invariants of the incremental ELT loop (load → anti-join → normalize →
+last-write-wins upsert), checked without a second implementation:
+
+- two incremental batches leave the same staging business rows as one run
+  over both sheets;
+- a rerun with no new raw rows changes nothing;
+- ``load`` reports the exact duplicate content-hash count;
+- ``--test`` takes the first ``TEST_LIMIT`` changed rows in
+  ``(extracted_at, id)`` order;
+- a failing upsert leaves no relation pinned in the session;
+- one warm load + incremental batch stays within its Spark job budget.
+"""
+
+from __future__ import annotations
+
+import json
+import logging
+import os
+
+import pytest
+
+from chilekids_etl_pipeline_spark import __main__ as cli
+from chilekids_etl_pipeline_spark.__main__ import (
+    run_incremental_elt,
+    run_load_sheets,
+)
+
+HEADER = ["id", "Date", "Type", "Client", "Category", "Total RUB"]
+
+SHEET_A = [
+    ["r1", "01.02.2024", "Income", "Acme", "ads", "1 200,50"],
+    ["r2", "2024-02-03", "Expense", "Globex", "rent", "$300"],
+    ["", "2024-02-04", "Expense", "Initech", "misc", "42"],  # no pk
+    ["r3", "05.02.2024", "Income", "Evil", "ads", "not-money"],  # quarantined
+]
+# a new pk row, an edited pk row (insert-if-absent: never reaches raw), an
+# edited row without a pk (a new content id), and a new malformed row
+SHEET_B = [
+    ["r4", "06.02.2024", "Income", "Hooli", "ads", "(7,5)"],
+    ["r2", "2024-02-03", "Expense", "Globex", "rent", "$999"],
+    ["", "2024-02-04", "Expense", "Initech", "misc", "43"],
+    ["r5", "07.02.2024", "Expense", "Umbrella", "misc", "12..3"],
+]
+
+BUSINESS = ["raw_id", "source_type", "payload_hash", "date", "type", "client",
+            "category", "total_rub", "year", "month",
+            "financial_missing_total", "parse_failed_cols", "_sink_id"]
+
+
+def _sheet(tmp_path, name: str, rows: list[list[str]]) -> str:
+    p = tmp_path / f"{name}.json"
+    p.write_text(json.dumps({"values": [HEADER, *rows]}))
+    return str(p)
+
+
+def _rows(spark, path: str, cols: list[str]) -> list[tuple]:
+    if not os.path.exists(path):
+        return []
+    return sorted((tuple(r) for r in spark.read.parquet(path).select(*cols)
+                   .collect()), key=repr)
+
+
+def test_two_batches_equal_one_run_over_both_sheets(spark, tmp_path):
+    a, b = _sheet(tmp_path, "a", SHEET_A), _sheet(tmp_path, "b", SHEET_B)
+
+    two = tmp_path / "two"
+    run_load_sheets("S", "R", values_json=a, raw_dir=str(two / "raw"))
+    assert run_incremental_elt(str(two / "raw"), str(two / "staging")) == 3
+    run_load_sheets("S", "R", values_json=b, raw_dir=str(two / "raw"))
+    assert run_incremental_elt(str(two / "raw"), str(two / "staging")) == 2
+
+    one = tmp_path / "one"
+    run_load_sheets("S", "R", values_json=a, raw_dir=str(one / "raw"))
+    run_load_sheets("S", "R", values_json=b, raw_dir=str(one / "raw"))
+    assert run_incremental_elt(str(one / "raw"), str(one / "staging")) == 5
+
+    # received_at (extraction time) and _batch_id (run time) differ by design
+    assert _rows(spark, str(two / "staging"), BUSINESS) == _rows(
+        spark, str(one / "staging"), BUSINESS)
+    qcols = ["raw_id", "payload_hash", "parse_failed_cols"]
+    quarantined = _rows(spark, str(two / "staging_quarantine"), qcols)
+    assert quarantined == _rows(spark, str(one / "staging_quarantine"), qcols)
+    assert [(r[0], r[2]) for r in quarantined] == [
+        ("r3", "total_rub"), ("r5", "total_rub")]
+
+
+def test_rerun_without_new_rows_changes_nothing(spark, tmp_path):
+    raw, staging = str(tmp_path / "raw"), str(tmp_path / "staging")
+    quarantine = staging + "_quarantine"
+    run_load_sheets("S", "R", values_json=_sheet(tmp_path, "a", SHEET_A),
+                    raw_dir=raw)
+    assert run_incremental_elt(raw, staging) == 3
+
+    def state():
+        cols = spark.read.parquet(staging).columns
+        return (sorted(os.listdir(staging)), sorted(os.listdir(quarantine)),
+                _rows(spark, staging, cols),
+                _rows(spark, quarantine, ["raw_id", "payload_hash"]))
+
+    before = state()
+    assert run_incremental_elt(raw, staging) == 0
+    assert run_incremental_elt(raw, staging, test_mode=True) == 0
+    assert state() == before
+
+
+def test_load_warns_with_exact_duplicate_hash_count(tmp_path, caplog,
+                                                    monkeypatch):
+    rows = [
+        ["", "01.02.2024", "Income", "Acme", "ads", "1"],
+        ["", "01.02.2024", "Income", "Acme", "ads", "1"],
+        ["x1", "01.02.2024", "Income", "Acme", "ads", "1"],
+        ["x2", "01.02.2024", "Income", "Acme", "ads", "1"],
+        ["", "02.02.2024", "Expense", "Globex", "rent", "2"],
+        ["", "02.02.2024", "Expense", "Globex", "rent", "2"],
+        ["", "02.02.2024", "Expense", "Globex", "rent", "2"],
+    ]
+    # the CLI's own log setup turns propagation off; caplog listens at root
+    monkeypatch.setattr(cli.logger, "propagate", True)
+    with caplog.at_level(logging.WARNING, logger=cli.logger.name):
+        n = run_load_sheets("S", "R", values_json=_sheet(tmp_path, "d", rows),
+                            raw_dir=str(tmp_path / "raw"))
+    assert n == 7  # duplicates are loaded (their fallback ids differ)
+    dup = [r.getMessage() for r in caplog.records
+           if "duplicate content hashes" in r.getMessage()]
+    assert dup == ["found 3 duplicate content hashes; add a unique ID column "
+                   "to the sheet"]
+
+
+def test_test_mode_takes_first_rows_by_extracted_at_then_id(
+        spark, tmp_path, monkeypatch):
+    raw, staging = str(tmp_path / "raw"), str(tmp_path / "staging")
+    early = [["z2", "01.02.2024", "Income", "A", "ads", "1"],
+             ["z1", "01.02.2024", "Income", "B", "ads", "2"]]
+    late = [["a3", "01.02.2024", "Income", "C", "ads", "3"],
+            ["a1", "01.02.2024", "Income", "D", "ads", "4"],
+            ["a2", "01.02.2024", "Income", "E", "ads", "5"]]
+    run_load_sheets("S", "R", values_json=_sheet(tmp_path, "e", early),
+                    raw_dir=raw)
+    run_load_sheets("S", "R", values_json=_sheet(tmp_path, "l", late),
+                    raw_dir=raw)
+    monkeypatch.setattr(cli, "TEST_LIMIT", 3)
+    assert run_incremental_elt(raw, staging, test_mode=True) == 3
+    # the earlier load first (by id within it), then the later load's
+    # smallest id — not the three smallest ids overall
+    assert [r[0] for r in _rows(spark, staging, ["raw_id"])] == [
+        "a1", "z1", "z2"]
+    assert run_incremental_elt(raw, staging, test_mode=True) == 2
+
+
+def test_failed_upsert_releases_persisted_relations(spark, tmp_path,
+                                                    monkeypatch):
+    from chilekids_etl_pipeline_spark.streaming import incremental
+
+    def failing_merge(*args, **kwargs):
+        def merge(batch, batch_id):
+            batch.count()  # the batch is read before the write fails
+            raise RuntimeError("disk full")
+        return merge
+
+    raw, staging = str(tmp_path / "raw"), str(tmp_path / "staging")
+    run_load_sheets("S", "R", values_json=_sheet(tmp_path, "a", SHEET_A),
+                    raw_dir=raw)
+    spark.catalog.clearCache()
+    pinned = spark.sparkContext._jsc.getPersistentRDDs
+    before = pinned().size()  # 0 unless an earlier test checkpointed
+    monkeypatch.setattr(incremental, "merge_upsert_batch", failing_merge)
+    with pytest.raises(RuntimeError, match="disk full"):
+        run_incremental_elt(raw, staging)
+    assert pinned().size() == before
+
+
+# Spark jobs of one warm batch on the fixture below: load 4 (raw schema,
+# id semi-join collect 2, append 1), incremental ELT 17 (raw, staging and
+# quarantine schema 3; the one aggregate over the normalized delta 5;
+# quarantine append 1; merge: target schema 1, max(_batch_id) 2, rewrite 5).
+# The count repeats exactly run to run, so a job that creeps back into the
+# per-batch path fails this test.
+JOB_BUDGET = 21
+
+
+def test_warm_batch_stays_within_job_budget(spark, tmp_path):
+    raw, staging = str(tmp_path / "raw"), str(tmp_path / "staging")
+    run_load_sheets("S", "R", values_json=_sheet(tmp_path, "a", SHEET_A),
+                    raw_dir=raw)
+    assert run_incremental_elt(raw, staging) == 3  # warm: every dir exists
+    b = _sheet(tmp_path, "b", SHEET_B)
+    sc = spark.sparkContext
+    group = f"elt-job-budget-{os.getpid()}"
+    sc.setJobGroup(group, "one warm ELT batch")
+    try:
+        run_load_sheets("S", "R", values_json=b, raw_dir=raw)
+        assert run_incremental_elt(raw, staging) == 2
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= JOB_BUDGET, sorted(jobs)
