@@ -81,6 +81,7 @@ def run_incremental_elt(
 
     from pyspark.sql import functions as F
 
+    from .operators.incremental import changed_records
     from .operators.staging import normalize_staging
     from .streaming.incremental import merge_upsert_batch
 
@@ -100,19 +101,17 @@ def run_incremental_elt(
     raw = spark.read.parquet(raw_dir).filter(F.col("source") == source)
     if "extracted_at" not in raw.columns:
         raw = raw.withColumn("extracted_at", F.current_timestamp())
-    changed = raw
-    if os.path.exists(staging_dir):
-        staged = spark.read.parquet(staging_dir).select("payload_hash")
-        changed = changed.join(staged, "payload_hash", "left_anti")
-    # Quarantined parse failures never enter staging, so without this
-    # second anti-join every run would re-select them, re-normalize them,
-    # and append duplicate rows to the quarantine parquet forever (and the
-    # "no new records" early exit would never fire while malformed raw rows
-    # exist). Failed rows are offered exactly once.
+    # Quarantined parse failures never enter staging, so without the
+    # quarantine as a second seen relation every run would re-select them,
+    # re-normalize them, and append duplicate rows to the quarantine parquet
+    # forever (and the "no new records" early exit would never fire while
+    # malformed raw rows exist). Failed rows are offered exactly once.
     quarantine_dir = staging_dir.rstrip("/") + "_quarantine"
-    if os.path.exists(quarantine_dir):
-        quarantined = spark.read.parquet(quarantine_dir).select("payload_hash")
-        changed = changed.join(quarantined, "payload_hash", "left_anti")
+    changed = changed_records(raw, *[
+        spark.read.parquet(d)
+        for d in (staging_dir, quarantine_dir)
+        if os.path.exists(d)
+    ])
     if limit:
         # --test takes the FIRST changed records (transform.py:233 ORDER BY
         # extracted_at, id). Only the limit needs that order: the upsert

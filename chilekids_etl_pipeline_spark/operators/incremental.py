@@ -7,10 +7,10 @@ Reference semantics:
 - audit diff on hash change: alembic/versions/7a8b9c0d1e2f
 
 Scale notes (100 TB):
-- ``changed_records`` is a LEFT ANTI hash join; only the hash column of the
-  staging side is shuffled (projected before the join, so the exchange
-  carries 16 bytes/row). On a real deployment staging would be bucketed by
-  payload_hash, removing its shuffle entirely.
+- ``changed_records`` is one LEFT ANTI hash join per seen relation; only
+  the hash column of each seen side is shuffled (projected before the join,
+  so the exchange carries 16 bytes/row). On a real deployment staging would
+  be bucketed by payload_hash, removing its shuffle entirely.
 - ``upsert_latest`` is the shuffle-heavy core of a MERGE; expressed as a
   window dedup it does exactly one exchange on the key.
 - No ``.collect()`` anywhere; everything stays a DataFrame.
@@ -39,13 +39,19 @@ def mark_content_duplicates(
     return df.withColumn(out, F.row_number().over(w) > F.lit(1))
 
 
-def changed_records(raw: DataFrame, staging: DataFrame, hash_col: str = "payload_hash") -> DataFrame:
-    """Rows in raw whose payload_hash is absent from staging (new/changed).
+def changed_records(raw: DataFrame, *seen: DataFrame, hash_col: str = "payload_hash") -> DataFrame:
+    """Rows in raw whose payload_hash is absent from every ``seen`` relation
+    (new/changed).
 
-    LEFT ANTI join == the reference's ``LEFT JOIN … WHERE s.hash IS NULL``
-    (src/transform.py:203-209).
+    One LEFT ANTI join per relation == the reference's ``LEFT JOIN … WHERE
+    s.hash IS NULL`` (src/transform.py:203-209). The seen side is not
+    deduplicated: an anti join's result does not depend on duplicates
+    there, and Spark does not optimize a ``distinct()`` away (it plans an
+    aggregate and an exchange under the join).
     """
-    return raw.join(staging.select(hash_col).distinct(), on=hash_col, how="left_anti")
+    for s in seen:
+        raw = raw.join(s.select(hash_col), on=hash_col, how="left_anti")
+    return raw
 
 
 def upsert_latest(df: DataFrame, key_cols: list[str], version_cols: list[str]) -> DataFrame:

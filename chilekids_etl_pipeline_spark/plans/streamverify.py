@@ -266,7 +266,6 @@ def streaming_upsert_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         target,
         os.path.join(work, "ckpt"),
         key_col="raw_id",
-        table_format="parquet",
     )
     q.awaitTermination()
     return spark.read.parquet(target).drop("_batch_id", "_sink_id")

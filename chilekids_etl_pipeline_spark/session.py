@@ -14,6 +14,8 @@ from pyspark.sql import SparkSession
 # JSON field resolution, and the wide-projection codegen cap.
 RUNTIME_CONFS = {
     "spark.sql.session.timeZone": "UTC",
+    # events.parquet carries TIMESTAMP(NANOS); read as long, converted
+    # back to timestamp in sources.tables (Spark has no nanos type).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Unannotated parquet TIMESTAMP (isAdjustedToUTC=false, how the test
     # tables are written) must read as TIMESTAMP (LTZ), not TIMESTAMP_NTZ:
@@ -21,7 +23,17 @@ RUNTIME_CONFS = {
     # the session pinned to UTC the wall-clock micros equal DuckDB's naive
     # read of the same files.
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    # Exact-key JSON extraction: staging headers differ only by case
+    # (Date/date, Type/type are distinct payload keys), so struct-typed
+    # from_json needs case-sensitive field resolution. All internal
+    # column references use consistent casing.
     "spark.sql.caseSensitive": "true",
+    # Wide ELT projections (40+ staging columns of parse trees) overflow
+    # whole-stage codegen's single generated method — janino fails and
+    # Spark silently falls back to interpreted eval (~10x slower). Capping
+    # fused-plan width makes wide subtrees use per-operator codegen, which
+    # splits methods and always compiles; narrow analytical plans (TPC-H
+    # shapes are <20 columns) keep full whole-stage fusion.
     "spark.sql.codegen.maxFields": "48",
     "spark.sql.adaptive.enabled": "true",
     # Arbitrary-key header fallback builds a lowercase/space-stripped key map
@@ -110,10 +122,11 @@ def get_spark(app_name: str = "chilekids-etl-spark") -> SparkSession:
     # worse than a deterministic sort-merge).
     mem_mb = _mem_mb(os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     bcast = (64 if mem_mb >= 8192 else max(4, mem_mb // 256)) * 1024 * 1024
+    builder = SparkSession.builder.appName(app_name)
+    for k, v in RUNTIME_CONFS.items():
+        builder = builder.config(k, v)
     builder = (
-        SparkSession.builder.appName(app_name)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        builder.config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Shuffle width defaults to the thread count (local mode: one
@@ -142,27 +155,6 @@ def get_spark(app_name: str = "chilekids-etl-spark") -> SparkSession:
             "spark.driver.maxResultSize",
             os.environ.get("SPARK_GRAFT_MAX_RESULT", "4g"),
         )
-        .config("spark.sql.session.timeZone", "UTC")
-        # Wide ELT projections (40+ staging columns of parse trees) overflow
-        # whole-stage codegen's single generated method — janino fails and
-        # Spark silently falls back to interpreted eval (~10x slower). Capping
-        # fused-plan width makes wide subtrees use per-operator codegen, which
-        # splits methods and always compiles; narrow analytical plans (TPC-H
-        # shapes are <20 columns) keep full whole-stage fusion.
-        .config("spark.sql.codegen.maxFields", "48")
-        # Exact-key JSON extraction: staging headers differ only by case
-        # (Date/date, Type/type are distinct payload keys), so struct-typed
-        # from_json needs case-sensitive field resolution. All internal
-        # column references use consistent casing.
-        .config("spark.sql.caseSensitive", "true")
-        # events.parquet carries TIMESTAMP(NANOS); read as long, converted
-        # back to timestamp in sources.tables (Spark has no nanos type).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Unannotated parquet timestamps read as LTZ, not NTZ (see
-        # RUNTIME_CONFS).
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        # Normalized-header fallback map is last-wins (see RUNTIME_CONFS).
-        .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
     )
     if not os.environ.get("MASTER") and not os.environ.get("SPARK_MASTER"):
         builder = builder.master(f"local[{cpus}]")

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.incremental import with_payload_hash
+from ..operators.incremental import upsert_latest, with_payload_hash
 
 EVENT_SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
 
@@ -110,12 +110,13 @@ def merge_upsert_batch(
       ENOTEMPTY and wedge the sink).
 
     Single-writer assumption (one streaming query owns ``target_dir``),
-    same as any non-transactional file sink. On a Delta/Iceberg runtime
-    this whole body is ``MERGE INTO target USING batch ON target.key =
-    batch.key`` — the parquet rewrite is the portable stand-in (and the
-    window dedup below is exactly the shuffle MERGE performs on the key).
-    Within one batch, ``order_cols`` (descending) pick the winner per
-    key; across batches the newer batch wins.
+    same as any non-transactional file sink. The target semantics are a
+    file-level ``MERGE INTO target USING batch ON target.key = batch.key``
+    (only the files holding updated keys rewritten); this body rewrites
+    the whole target, and its ``upsert_latest`` dedup is the shuffle such
+    a MERGE performs on the key. Within one batch, ``order_cols``
+    (descending) pick the winner per key; across batches the newer batch
+    wins.
 
     ``batch_id=None`` is the single-writer form (the CLI): the batch gets
     the wall-clock second, or the id after the highest this sink has
@@ -125,8 +126,6 @@ def merge_upsert_batch(
     import os
     import shutil
     import time
-
-    from pyspark.sql import Window
 
     def _merge(batch: DataFrame, batch_id: int | None) -> bool:
         spark = batch.sparkSession
@@ -161,16 +160,11 @@ def merge_upsert_batch(
         # from a previous checkpoint/sink may carry arbitrarily high ids,
         # so the current writer outranks them first, then id, then payload
         # order — wall-clock last-write-wins across checkpoint resets.
-        w = Window.partitionBy(key_col).orderBy(
-            (F.col("_sink_id") == sink_id).desc(),
-            F.col("_batch_id").desc(),
-            *[F.col(c).desc() for c in order_cols],
-        )
-        result = (
-            merged.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        result = upsert_latest(
+            merged.withColumn("_own", F.col("_sink_id") == sink_id),
+            [key_col],
+            ["_own", "_batch_id", *order_cols],
+        ).drop("_own")
         result.write.mode("overwrite").parquet(tmp)  # materializes the read
         if os.path.exists(target_dir):
             os.rename(target_dir, old)
@@ -194,60 +188,16 @@ def start_upsert_sink(
     target_dir: str,
     checkpoint_dir: str,
     key_col: str = "raw_id",
-    table_format: str = "auto",
 ):
     """Continuous keyed upsert into ``target_dir`` with checkpointed
     progress — the full streaming mirror of the reference's ingest loop
     (poll → normalize → upsert), restartable at the last committed batch.
 
-    ``table_format``: "auto" uses a transactional Delta ``MERGE INTO``
-    when the jars are on the classpath (streaming/merge_delta.py) and
-    falls back to the portable parquet-swap body otherwise; "delta" or
-    "parquet" force a path (delta raises if unavailable). The swap body
-    is the stand-in, not the preferred target — on a lakehouse runtime
-    the sink is a real table.
-
     The sink identity is derived from the checkpoint path: batch ids are
     only meaningful per checkpoint, so replay detection must be keyed on
-    (checkpoint, batch) — see ``merge_upsert_batch`` (by hand) and
-    ``merge_upsert_batch_delta`` (Delta txnAppId/txnVersion)."""
-    import os
-
-    from .merge_delta import delta_available, merge_upsert_batch_delta
-
-    if table_format not in ("auto", "delta", "parquet"):
-        raise ValueError(
-            f"unknown table_format {table_format!r}; "
-            "expected 'auto', 'delta' or 'parquet'"
-        )
-    sink_id = sink_id_for(checkpoint_dir)
-    # auto never switches an EXISTING parquet-swap target onto the Delta
-    # body (a fresh Delta log would orphan the prior rows); continuity
-    # wins, and an explicit 'delta' request on such a target raises in
-    # the merge body instead of silently rewriting
-    existing_parquet = (
-        os.path.exists(target_dir)
-        and not os.path.exists(os.path.join(target_dir, "_delta_log"))
-        and bool(os.listdir(target_dir))
-    )
-    use_delta = table_format == "delta" or (
-        table_format == "auto"
-        and not existing_parquet
-        and delta_available(normalized.sparkSession)
-    )
-    if table_format == "delta" and not delta_available(
-        normalized.sparkSession
-    ):
-        raise RuntimeError(
-            "table_format='delta' but the session can't run Delta MERGE "
-            "(jars missing from the classpath, or spark.sql.extensions "
-            "lacks io.delta.sql.DeltaSparkSessionExtension); use 'auto' "
-            "or 'parquet'"
-        )
-    body = (
-        merge_upsert_batch_delta(target_dir, key_col, sink_id=sink_id)
-        if use_delta
-        else merge_upsert_batch(target_dir, key_col, sink_id=sink_id)
+    (checkpoint, batch) — see ``merge_upsert_batch``."""
+    body = merge_upsert_batch(
+        target_dir, key_col, sink_id=sink_id_for(checkpoint_dir)
     )
     return (
         normalized.writeStream.foreachBatch(body)

@@ -19,6 +19,15 @@ def test_changed_records_anti_join(spark):
     staging = spark.createDataFrame([("a",), ("b",)], "payload_hash string")
     got = sorted(r.id for r in changed_records(raw, staging).collect())
     assert got == [3]
+    # every seen relation removes its hashes, and duplicates on a seen side
+    # neither multiply nor drop raw rows
+    raw = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c"), (4, "d"), (5, "d")], "id int, payload_hash string"
+    )
+    quarantine = spark.createDataFrame([("c",), ("c",), ("x",)], "payload_hash string")
+    got = sorted(r.id for r in changed_records(raw, staging, quarantine).collect())
+    assert got == [4, 5]
+    assert sorted(r.id for r in changed_records(raw).collect()) == [1, 2, 3, 4, 5]
 
 
 def test_upsert_latest_keeps_highest_version(spark):
@@ -27,6 +36,16 @@ def test_upsert_latest_keeps_highest_version(spark):
     )
     got = {r.k: (r.v, r.version) for r in upsert_latest(df, ["k"], ["version"]).collect()}
     assert got == {1: (20.0, 2), 2: (5.0, 1)}
+    # the first order column decides; the second only breaks its ties
+    batch = spark.createDataFrame(
+        [("k1", 1, "h1"), ("k1", 3, "h2"), ("k1", 3, "h0"), ("k1", 2, "h3"), ("k2", 5, "h4")],
+        "raw_id string, received_at int, payload_hash string",
+    )
+    got = {
+        r.raw_id: (r.received_at, r.payload_hash)
+        for r in upsert_latest(batch, ["raw_id"], ["received_at", "payload_hash"]).collect()
+    }
+    assert got == {"k1": (3, "h2"), "k2": (5, "h4")}
 
 
 def test_audit_diff_emits_changed_only(spark):

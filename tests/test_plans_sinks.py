@@ -613,6 +613,16 @@ def test_skew_join_strategies_plan_pins_protected_forms(spark):
     assert "salt" in plan
 
 
+def test_get_spark_carries_every_runtime_conf(spark):
+    """The builder applies RUNTIME_CONFS itself (the context's conf is what
+    get_spark() built, before any ensure_session_confs() pass), so its
+    session needs no repair at query entry."""
+    from chilekids_etl_pipeline_spark.session import RUNTIME_CONFS
+
+    built = spark.sparkContext.getConf()
+    assert {k: built.get(k) for k in RUNTIME_CONFS} == RUNTIME_CONFS
+
+
 def test_mem_mb_uses_spark_size_grammar():
     """Round-11 (r10 advice): SPARK_GRAFT_DRIVER_MEM feeds BOTH
     spark.driver.memory (Spark parses bare numbers as MiB) and the
