@@ -1,149 +1,22 @@
-"""Delta MERGE upsert path (streaming/merge_delta.py), jar-gated.
+"""Within-batch dedup of a keyed merge (``upsert_latest``).
 
-The transactional target is the preferred sink; this runtime ships no
-Delta jars, so the MERGE round-trip test skips itself and the suite
-pins everything that doesn't need the jars: availability detection,
-dispatcher fallback + forced-delta error, and the within-batch dedup
-the MERGE source requires (MERGE forbids multiple source matches per
-target row).
-
-When the jars ARE present (a lakehouse runtime), the skipped test runs
-the same scenario the parquet-swap suite runs: create-on-first-batch,
-upsert-overwrites-matched-keys, replayed batch is a no-op via Delta's
-txnAppId/txnVersion idempotent writes.
-
-ENVIRONMENT-BLOCKED (verified 2026-08-14, round 7): the sandbox has no
-network route, so the jars cannot be fetched. Install transcript::
-
-    $ python -m pip download delta-spark --no-deps -d /tmp/deltadl
-    WARNING: Retrying ... after connection broken by
-      'NewConnectionError(... Failed to establish a new connection:
-      [Errno -2] Name or service not known)'  (x2)
-    ERROR: Could not find a version that satisfies the requirement
-      delta-spark (from versions: none)
-
-No delta/iceberg jar exists anywhere on the image (``find / -name
-'*delta*jar*'``: only pytest tmpdirs), pyspark's bundled jars dir has
-none, and ``import delta`` raises ModuleNotFoundError. The skip below
-is therefore a runtime property, not a code gap — the MERGE body,
-dispatcher, replay protection, and txn-conf serialization are all
-exercised by the jar-free tests in this module.
+A merge into the keyed sink must see one source row per key, so a batch
+that writes the same key more than once keeps only its last write: the
+highest first order column, with the second order column breaking ties.
 """
 
 from __future__ import annotations
 
-import pytest
-
-from chilekids_etl_pipeline_spark.streaming.merge_delta import (
-    _dedup_batch,
-    delta_available,
-    merge_upsert_batch_delta,
-)
-
-
-def test_delta_detection_is_a_clean_boolean(spark):
-    assert delta_available(spark) in (True, False)
-
-
-def test_forced_delta_without_jars_raises(spark, tmp_path):
-    if delta_available(spark):
-        pytest.skip("delta jars present; forced-delta works here")
-    from chilekids_etl_pipeline_spark.streaming.incremental import (
-        start_upsert_sink,
-    )
-
-    stream = spark.readStream.format("rate").load()
-    with pytest.raises(RuntimeError, match="can't run Delta MERGE"):
-        start_upsert_sink(
-            stream,
-            str(tmp_path / "tgt"),
-            str(tmp_path / "ckpt"),
-            key_col="value",
-            table_format="delta",
-        )
+from chilekids_etl_pipeline_spark.operators.incremental import upsert_latest
 
 
 def test_dedup_batch_picks_last_write_per_key(spark):
     batch = spark.createDataFrame(
-        [
-            ("k1", 1, "h1"),
-            ("k1", 3, "h2"),
-            ("k1", 2, "h3"),
-            ("k2", 5, "h4"),
-        ],
+        [("k1", 1, "h1"), ("k1", 3, "h2"), ("k1", 3, "h0"), ("k1", 2, "h3"), ("k2", 5, "h4")],
         "raw_id string, received_at int, payload_hash string",
     )
-    out = {
-        r.raw_id: r.received_at
-        for r in _dedup_batch(
-            batch, "raw_id", ("received_at", "payload_hash")
-        ).collect()
-    }
-    assert out == {"k1": 3, "k2": 5}
-
-
-def test_delta_merge_roundtrip_and_replay(spark, tmp_path):
-    """Full MERGE contract on a real Delta table — runs only when the
-    jars are present, skips otherwise (optional dependency)."""
-    if not delta_available(spark):
-        pytest.skip("Delta jars not on the classpath in this runtime")
-
-    target = str(tmp_path / "delta_target")
-    body = merge_upsert_batch_delta(target, key_col="raw_id", sink_id="s1")
-
-    b0 = spark.createDataFrame(
-        [("k1", 1, "a"), ("k2", 1, "b")],
-        "raw_id string, received_at int, payload_hash string",
-    )
-    body(b0, 0)
-    b1 = spark.createDataFrame(
-        [("k2", 2, "b2"), ("k3", 2, "c")],
-        "raw_id string, received_at int, payload_hash string",
-    )
-    body(b1, 1)
     got = {
-        r.raw_id: r.payload_hash
-        for r in spark.read.format("delta").load(target).collect()
+        r.raw_id: (r.received_at, r.payload_hash)
+        for r in upsert_latest(batch, ["raw_id"], ["received_at", "payload_hash"]).collect()
     }
-    assert got == {"k1": "a", "k2": "b2", "k3": "c"}
-    # replayed batch (same sink, same id) must be a no-op
-    replay = spark.createDataFrame(
-        [("k2", 9, "SHOULD-NOT-APPLY")],
-        "raw_id string, received_at int, payload_hash string",
-    )
-    body(replay, 1)
-    got = {
-        r.raw_id: r.payload_hash
-        for r in spark.read.format("delta").load(target).collect()
-    }
-    assert got["k2"] == "b2"
-
-
-def test_invalid_table_format_rejected(spark, tmp_path):
-    from chilekids_etl_pipeline_spark.streaming.incremental import (
-        start_upsert_sink,
-    )
-
-    stream = spark.readStream.format("rate").load()
-    with pytest.raises(ValueError, match="unknown table_format"):
-        start_upsert_sink(
-            stream,
-            str(tmp_path / "t"),
-            str(tmp_path / "c"),
-            table_format="Delta",  # case typo must not silently degrade
-        )
-
-
-def test_delta_body_refuses_existing_parquet_target(spark, tmp_path):
-    """Switching an existing parquet-swap target onto the MERGE body
-    would orphan every previously upserted row — the guard fires before
-    any Delta write, so it is testable without the jars."""
-    target = str(tmp_path / "tgt")
-    spark.createDataFrame([("k1", 1, "a")],
-        "raw_id string, received_at int, payload_hash string"
-    ).write.parquet(target)
-    body = merge_upsert_batch_delta(target, key_col="raw_id", sink_id="s")
-    batch = spark.createDataFrame([("k2", 2, "b")],
-        "raw_id string, received_at int, payload_hash string")
-    with pytest.raises(RuntimeError, match="non-Delta table"):
-        body(batch, 0)
+    assert got == {"k1": (3, "h2"), "k2": (5, "h4")}

@@ -36,16 +36,6 @@ def test_upsert_latest_keeps_highest_version(spark):
     )
     got = {r.k: (r.v, r.version) for r in upsert_latest(df, ["k"], ["version"]).collect()}
     assert got == {1: (20.0, 2), 2: (5.0, 1)}
-    # the first order column decides; the second only breaks its ties
-    batch = spark.createDataFrame(
-        [("k1", 1, "h1"), ("k1", 3, "h2"), ("k1", 3, "h0"), ("k1", 2, "h3"), ("k2", 5, "h4")],
-        "raw_id string, received_at int, payload_hash string",
-    )
-    got = {
-        r.raw_id: (r.received_at, r.payload_hash)
-        for r in upsert_latest(batch, ["raw_id"], ["received_at", "payload_hash"]).collect()
-    }
-    assert got == {"k1": (3, "h2"), "k2": (5, "h4")}
 
 
 def test_audit_diff_emits_changed_only(spark):
