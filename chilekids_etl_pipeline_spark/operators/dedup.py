@@ -139,7 +139,6 @@ def minhash_bands(
     num_hashes: int = 12,
     band_size: int = 3,
     id_col: str = "doc_id",
-    hashed: bool = False,
 ) -> DataFrame:
     """(doc_id, band, band_sig): Carter-Wegman min-hash per permutation,
     grouped into bands of ``band_size`` and re-hashed to a band signature.
@@ -159,25 +158,13 @@ def minhash_bands(
     naive explode-by-seed form shuffles num_hashes× the shingle volume and
     needs a second aggregation; measured ~2× slower at sf0.1 and far worse
     at scale.)
-
-    ``hashed=True`` takes pre-digested ``(id_col, h1, h2)`` rows instead
-    of shingle strings — the caller pays the md5 exactly once on a
-    materialized narrow table rather than once per consumer subtree
-    (see dedup_minhash_lsh).
     """
-    if hashed:
-        digested = sh.select(
-            F.col(id_col),
-            F.col("h1").alias("__h1"),
-            F.col("h2").alias("__h2"),
-        )
-    else:
-        digested = sh.withColumn("__h", F.md5("shingle")).withColumns(
-            {
-                "__h1": F.expr("cast(conv(substr(__h, 1, 15), 16, 10) AS bigint)"),
-                "__h2": F.expr("cast(conv(substr(__h, 16, 13), 16, 10) AS bigint)"),
-            }
-        )
+    digested = sh.withColumn("__h", F.md5("shingle")).withColumns(
+        {
+            "__h1": F.expr("cast(conv(substr(__h, 1, 15), 16, 10) AS bigint)"),
+            "__h2": F.expr("cast(conv(substr(__h, 16, 13), 16, 10) AS bigint)"),
+        }
+    )
     mins = [
         F.min(F.col("__h1") + F.lit(s) * F.col("__h2")).alias(f"mh{s}")
         for s in range(num_hashes)

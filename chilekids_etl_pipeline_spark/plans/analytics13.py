@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..sources.tables import load_table
+from ..sources.tables import load_table, materialize
 from .registry import register
 
 
@@ -183,11 +183,10 @@ def theta_sketch_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is k x |segments| rows (~320), so the eager checkpoint is
     # metadata-sized; every algebra join then reads materialized blocks
     # and the fact table is scanned exactly once.
-    sketch = spark.sql(f"WITH {_theta_sketch_cte('spark')} SELECT * FROM sketch")
-    sketch.localCheckpoint(eager=True).createOrReplaceTempView(
-        "theta_sketch_mat"
-    )
-    return spark.sql(_theta_sql("spark", sketch_src="theta_sketch_mat"))
+    sketch = materialize(spark.sql(
+        f"WITH {_theta_sketch_cte('spark')} SELECT * FROM sketch"
+    ), eager=True)
+    return spark.sql(_theta_sql("spark", sketch_src=sketch))
 
 
 # ---------------------------------------------------------------------------

@@ -22,7 +22,7 @@ from ..functions.sketch import (
     hll_shifted_sql,
     hll_w_sql,
 )
-from ..sources.tables import load_table
+from ..sources.tables import load_table, materialize
 from .registry import register
 
 # ---------------------------------------------------------------------------
@@ -211,9 +211,8 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The r4 driver-bench 2.45 s row was concurrent-load variance
     # (idle remeasure 0.54-0.66 s).
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    rfm = spark.sql(_rfm_base_sql("spark"))
-    rfm.persist().createOrReplaceTempView("rfm_base_mat")
-    return spark.sql(_rfm_sql("spark", rfm_src="rfm_base_mat"))
+    rfm = materialize(spark.sql(_rfm_base_sql("spark")))
+    return spark.sql(_rfm_sql("spark", rfm_src=rfm))
 
 
 # ---------------------------------------------------------------------------
@@ -282,9 +281,8 @@ def order_backlog_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem below the join (see _BACKLOG_SPANS_SPARK)."""
     for t in ("orders", "lineitem"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-    spans = spark.sql(_BACKLOG_SPANS_SPARK)
-    spans.persist().createOrReplaceTempView("backlog_spans_mat")
-    return spark.sql(_backlog_sql("spark", spans_src="backlog_spans_mat"))
+    spans = materialize(spark.sql(_BACKLOG_SPANS_SPARK))
+    return spark.sql(_backlog_sql("spark", spans_src=spans))
 
 
 # ---------------------------------------------------------------------------

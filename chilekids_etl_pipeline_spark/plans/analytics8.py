@@ -24,7 +24,7 @@ from ..functions.sketch import (
     hll_shifted_sql,
     hll_w_sql,
 )
-from ..sources.tables import load_table
+from ..sources.tables import load_table, materialize
 from .registry import register
 
 # ---------------------------------------------------------------------------
@@ -174,13 +174,12 @@ def graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge table is materialized once (→ ~0.6 s)."""
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     load_table(spark, sf_dir, "part").createOrReplaceTempView("part")
-    edges = spark.sql(_triangle_edges_sql("spark"))
     # lazy persist: the eager localCheckpoint's blocking job
     # A/B-measured +0.96 s median here (AB_r12_batch2) — the edge table
     # is tiny and its five racing recomputes overlap, while the
     # checkpoint barrier is pure serial latency.
-    edges.persist().createOrReplaceTempView("tri_edges_mat")
-    return spark.sql(_triangle_sql("spark", edges_src="tri_edges_mat"))
+    edges = materialize(spark.sql(_triangle_edges_sql("spark")))
+    return spark.sql(_triangle_sql("spark", edges_src=edges))
 
 
 # ---------------------------------------------------------------------------

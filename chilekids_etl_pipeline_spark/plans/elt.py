@@ -338,10 +338,10 @@ def elt_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload-hash projections (raw + staging derive from the same scan)
     from a full-width exchange instead of the 3-split local scan
     (sf1 interleaved A/B: 4.3 → 2.8 s median; no-op on a cluster).
-    Size-gated at 4 MB: below that the exchange is pure stage-barrier
-    loss (r10 alternating A/B at sf0.1, events = 2 MB: +0.36 s —
+    Size-gated: below the gate the exchange is pure stage-barrier loss
+    (r10 alternating A/B at sf0.1, events = 2,045,762 B: +0.36 s —
     AB_r8_vs_r10.json); sf1 events (12 MB) still widens."""
-    ev = rebalance_if_big(load_table(spark, sf_dir, "events"), min_bytes=4 << 20)
+    ev = rebalance_if_big(load_table(spark, sf_dir, "events"))
     cur = ev.withColumn(
         "value",
         F.when(F.col("event_id") % 5 == 0, F.col("value") + 10).otherwise(F.col("value")),

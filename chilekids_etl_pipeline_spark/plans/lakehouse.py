@@ -26,7 +26,7 @@ from ..functions.sketch import (
     hll_shifted_sql,
     hll_w_sql,
 )
-from ..sources.tables import load_table
+from ..sources.tables import load_table, materialize
 from .registry import register
 
 # ---------------------------------------------------------------------------
@@ -310,8 +310,7 @@ def range_partition_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"SELECT percentile(o_totalprice, array({fr})) AS qs, "
         "min(o_totalprice) AS mn, max(o_totalprice) AS mx FROM orders"
     )
-    th.persist().createOrReplaceTempView("range_plan_th_mat")
-    return spark.sql(_range_plan_sql("spark", th_src="range_plan_th_mat"))
+    return spark.sql(_range_plan_sql("spark", th_src=materialize(th)))
 
 
 # ---------------------------------------------------------------------------

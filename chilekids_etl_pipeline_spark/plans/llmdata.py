@@ -51,7 +51,7 @@ from ..operators.similarity import (
     topk_cosine,
     with_norm,
 )
-from ..sources.tables import load_table, maybe_rebalance, rebalance_if_big
+from ..sources.tables import load_table, materialize, maybe_rebalance, rebalance_if_big
 from .registry import register
 
 # ---------------------------------------------------------------------------
@@ -134,14 +134,13 @@ def _vecs_spark(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]
     # test scale, so the per-row vector lambdas downstream (hyperplane
     # projections, norms, dot products) starve on 2 of 32 cores without
     # the widening — dedup_embedding_cosine sf1 A/B: 14.9 -> 6.5 s median.
-    # Below ~2 MB the exchange is pure stage-barrier loss (r10 A/B at
-    # sf0.1: knn +0.45 s, ann_ivf +0.64 s — AB_r8_vs_r10.json), so the
-    # gate skips it there; sf1 (5.2 MB) still widens.
+    # Below the gate the exchange is pure stage-barrier loss (r10 A/B at
+    # sf0.1: knn +0.45 s, ann_ivf +0.64 s — AB_r8_vs_r10.json), so it is
+    # skipped there; sf1 (5.2 MB) still widens.
     base = rebalance_if_big(
         load_table(spark, sf_dir, "embeddings").select(
             "vec_id", F.expr(VEC_AS_DOUBLE).alias("vec")
-        ),
-        min_bytes=2 << 20,
+        )
     )
     planted = (
         base.filter(F.col("vec_id") % 25 == 0)
@@ -241,9 +240,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sides) that run as concurrent stages and race a lazily-built
     # cache into duplicate re-shingles (see
     # llmdata20.minhash_estimate_error).
-    sh = shingle_rows(_docs_aug_spark(spark, sf_dir)).localCheckpoint(
-        eager=True
-    )
+    sh = spark.table(materialize(shingle_rows(_docs_aug_spark(spark, sf_dir)), eager=True))
     return jaccard_pairs(
         sh, 0.5, df_cap_denom=_JACCARD_DF_DENOM, df_cap_abs=_JACCARD_DF_ABS
     )
@@ -356,7 +353,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the narrow restructure (kept in git history, commit r13) is the
     # right shape there — but on every measured local configuration
     # the racing form wins, and the round rules score measured walls.
-    shf = drop_hot_shingles(sh, df_cap_abs=_MINHASH_DF_ABS).persist()
+    shf = spark.table(materialize(drop_hot_shingles(sh, df_cap_abs=_MINHASH_DF_ABS)))
     bands = minhash_bands(shf, num_hashes=12, band_size=3)
     cand = lsh_candidate_pairs(bands)
     return verify_jaccard(cand, shf, 0.5)
@@ -470,7 +467,7 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # AB_r13_batch1.json) and +5.75 s median sf1
     # (AB_r13_batch1_sf1.json). Overlapping racing recomputes beat
     # every serialized materialization tried at every measured scale.
-    shf = drop_hot_shingles(sh, df_cap_abs=_MINHASH_DF_ABS).persist()
+    shf = spark.table(materialize(drop_hot_shingles(sh, df_cap_abs=_MINHASH_DF_ABS)))
     bands = minhash_bands(shf, num_hashes=12, band_size=3)
     new_b = bands.filter(F.col("doc_id") >= PLANT_SENTINEL).select(
         F.col("doc_id").alias("new_id"), "band", "band_sig"
@@ -703,7 +700,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # any join stage can overlap and loses the win. The early-hamming-
     # before-distinct reorder measured no difference, so the shuffle
     # order stays as documented.
-    sigs = simhash(sdocs).persist()
+    sigs = spark.table(materialize(simhash(sdocs)))
     return hamming_near_pairs(sigs, max_hamming=3).withColumn(
         "hamming", F.col("hamming").cast("int")
     )
@@ -1355,11 +1352,9 @@ def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # across the two aggregate subtrees, so the plan re-ran the explode
     # AND gained a (w1,w2)-wide shuffle. Checkpointed blocks are
     # referenced structurally, so the reuse cannot miss.
-    cnt2 = (
-        bg.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("c2"))
-        .localCheckpoint(eager=True)
-    )
+    cnt2 = spark.table(materialize(
+        bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2")), eager=True
+    ))
     cnt1 = cnt2.groupBy("w1").agg(F.sum("c2").alias("c1"))
     vocab = (
         docs.select(F.explode(F.expr(_W_SPARK)).alias("tok"))

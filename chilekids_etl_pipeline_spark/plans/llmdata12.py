@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import HEX, words_sql
 from ..operators.dedup import hamming_near_pairs
-from ..sources.tables import load_table
+from ..sources.tables import load_table, materialize
 from .registry import register
 
 
@@ -454,11 +454,10 @@ def image_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the signature table feeds both sides of the block-pair equi-join;
     # lazy persist so the per-doc hashing pipeline runs once (same
     # measured rationale as dedup_simhash_pairs' sig persist)
-    sigs = (
+    sigs = spark.table(materialize(
         spark.sql(_dhash_sql("spark", sigs_only=True))
         .withColumnRenamed("dhash", "simhash")
-        .persist()
-    )
+    ))
     return hamming_near_pairs(sigs, max_hamming=3).withColumn(
         "hamming", F.col("hamming").cast("int")
     )

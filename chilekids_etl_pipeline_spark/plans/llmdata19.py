@@ -17,7 +17,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.text import shingles_sql, words_sql
-from ..sources.tables import load_table, maybe_rebalance
+from ..sources.tables import (
+    above_size_gate,
+    load_table,
+    materialize,
+    maybe_rebalance,
+)
 from .registry import register
 
 
@@ -204,34 +209,31 @@ def dedup_yield_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = maybe_rebalance(load_table(spark, sf_dir, "documents"))
     docs.createOrReplaceTempView("documents")
     grams_expr = shingles_sql("spark", words_sql("spark"), _YC_N)
-    sh = spark.sql(
-        f"WITH docs AS ({_yield_docs_cte('spark')}) "
-        f"SELECT doc_id, explode({grams_expr}) AS g FROM docs"
-    )
     # eager localCheckpoint, not persist: sh's consumers run as
     # concurrent stages and raced the not-yet-built cache into duplicate
     # re-shingles (r12 stage profile: 23.5 + 8.8 executor-seconds);
     # checkpointed blocks are referenced structurally, so the explode
     # runs once. (r12 A/B: wash at sf0.1, kept for the structural
     # guarantee.)
-    sh.localCheckpoint(eager=True).createOrReplaceTempView("yield_sh_mat")
+    sh = materialize(spark.sql(
+        f"WITH docs AS ({_yield_docs_cte('spark')}) "
+        f"SELECT doc_id, explode({grams_expr}) AS g FROM docs"
+    ), eager=True)
     # toks materialized too (r12): drop_stats, corpus_words, and the
     # df-cap's corpus count each re-ran the docs-union tokenize when
     # inlined (20 documents scans in the audited plan); the checkpointed
     # table is two integers per doc.
     w = words_sql("spark")
-    toks = spark.sql(
+    toks = materialize(spark.sql(
         f"WITH docs AS ({_yield_docs_cte('spark')}) "
         f"SELECT doc_id, cast(size({w}) AS bigint) AS n_words FROM docs"
-    )
-    toks.localCheckpoint(eager=True).createOrReplaceTempView("yield_toks_mat")
-    # r13 (VERDICT r12 #5), SIZE-GATED like ann_ivfpq's seams: above the
-    # 2 MB documents plan-size estimate the pair join — by far the
-    # dominant stage post-seam (19.9 executor-seconds) — runs on the two
+    ), eager=True)
+    # SIZE-GATED (r13): on large inputs the pair join — by far the
+    # dominant stage (19.9 executor-seconds) — runs on the two
     # md5-derived bigints per shingle instead of the shingle STRING,
     # and the df-cap becomes a broadcast ANTI-join against the tiny
     # `hot` set instead of a SortMergeJoin against the vocabulary-sized
-    # `keep` set (the r12 plan shuffled the full shingle table BY
+    # `keep` set (the string plan shuffles the full shingle table BY
     # STRING twice for it, once per jac consumer). Sort/join buffers
     # hold 24-byte fixed-width rows — the same narrow-payload form
     # minhash_estimate_error adopted in r10 (§2.3 shuffle fewer bytes).
@@ -243,47 +245,34 @@ def dedup_yield_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-verified with exact string Jaccard on shingle sets re-read
     # from the checkpointed string table for JUST those docs. Output
     # provably identical; no hash-collision exposure reaches the
-    # result. A/B: sf1 29.15 → 25.19 s median (2 rounds,
-    # AB_r13_batch1_sf1.json); at sf0.1 the three extra checkpoint
-    # jobs cost +1.55 s against a 2.4 s wall (AB_r13_batch1.json) —
-    # the same small-scale serialization loss as every Finding-1
-    # site, hence the gate (sf0.1 documents = 0.58 MB → inline path;
-    # sf1 = 5.8 MB → hash path).
-    from ..sources.tables import plan_size_bytes
-
-    docs_bytes = plan_size_bytes(
-        load_table(spark, sf_dir, "documents")
-    )
-    if docs_bytes is not None and docs_bytes < (2 << 20):
-        return spark.sql(
-            _yield_sql(
-                "spark", sh_src="yield_sh_mat", toks_src="yield_toks_mat"
-            )
-        )
-    hot = spark.sql(f"""
-        WITH df AS (SELECT g, count(*) AS n_docs
-                    FROM yield_sh_mat GROUP BY g),
-        corpus AS (SELECT count(*) AS n FROM yield_toks_mat)
+    # result. Each side of the gate wins on its own scale (4 cores, 5
+    # alternating pairs, medians): at sf0.1 the four extra checkpoint
+    # jobs cost more than they save (string join 5.54 s, hash path
+    # 7.11 s); at sf1 the narrow join wins (hash path 101.4 s, string
+    # join 111.6 s).
+    if not above_size_gate(load_table(spark, sf_dir, "documents")):
+        return spark.sql(_yield_sql("spark", sh_src=sh, toks_src=toks))
+    hot = materialize(spark.sql(f"""
+        WITH df AS (SELECT g, count(*) AS n_docs FROM {sh} GROUP BY g),
+        corpus AS (SELECT count(*) AS n FROM {toks})
         SELECT g FROM df CROSS JOIN corpus
         WHERE n_docs * {_YC_DF_MULT} > n OR n_docs > {_YC_DF_ABS}
-    """).localCheckpoint(eager=True)
-    hot.createOrReplaceTempView("yield_hot_mat")
-    hx = spark.sql("""
+    """), eager=True)
+    hx = materialize(spark.sql(f"""
         SELECT /*+ BROADCAST(h) */ sh.doc_id,
                cast(conv(substr(md5(sh.g), 1, 15), 16, 10) AS bigint) AS h1,
                cast(conv(substr(md5(sh.g), 16, 13), 16, 10) AS bigint) AS h2
-        FROM yield_sh_mat sh
-        LEFT ANTI JOIN yield_hot_mat h ON sh.g = h.g
-    """).localCheckpoint(eager=True)
-    hx.createOrReplaceTempView("yield_hx_mat")
-    cand = spark.sql("""
+        FROM {sh} sh
+        LEFT ANTI JOIN {hot} h ON sh.g = h.g
+    """), eager=True)
+    cand = materialize(spark.sql(f"""
         WITH sizes AS (SELECT doc_id, count(*) AS sz
-                       FROM yield_hx_mat GROUP BY doc_id),
+                       FROM {hx} GROUP BY doc_id),
         inter AS (
             SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-            FROM yield_hx_mat a
-            JOIN yield_hx_mat b ON a.h1 = b.h1 AND a.h2 = b.h2
-                               AND a.doc_id < b.doc_id
+            FROM {hx} a
+            JOIN {hx} b ON a.h1 = b.h1 AND a.h2 = b.h2
+                       AND a.doc_id < b.doc_id
             GROUP BY a.doc_id, b.doc_id
         )
         SELECT i.doc_a, i.doc_b
@@ -291,42 +280,34 @@ def dedup_yield_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         JOIN sizes sa ON sa.doc_id = i.doc_a
         JOIN sizes sb ON sb.doc_id = i.doc_b
         WHERE 3 * i.i >= sa.sz + sb.sz
-    """).localCheckpoint(eager=True)
-    cand.createOrReplaceTempView("yield_cand_mat")
+    """), eager=True)
     # exact string re-verify, pruned to the candidate docs: shingle
     # strings come back from the checkpointed explode (no re-scan), the
     # same stop-gram filter applies, and the Jaccard quotient is the
     # oracle's exact string form
-    jac = spark.sql("""
+    jac = materialize(spark.sql(f"""
         WITH ids AS (
-            SELECT doc_a AS doc_id FROM yield_cand_mat
+            SELECT doc_a AS doc_id FROM {cand}
             UNION
-            SELECT doc_b FROM yield_cand_mat
+            SELECT doc_b FROM {cand}
         ),
         docsets AS (
             SELECT /*+ BROADCAST(ids), BROADCAST(h) */
                    sh.doc_id, collect_list(sh.g) AS gs, count(*) AS sz
-            FROM yield_sh_mat sh
+            FROM {sh} sh
             LEFT SEMI JOIN ids ON sh.doc_id = ids.doc_id
-            LEFT ANTI JOIN yield_hot_mat h ON sh.g = h.g
+            LEFT ANTI JOIN {hot} h ON sh.g = h.g
             GROUP BY sh.doc_id
         )
         SELECT c.doc_a, c.doc_b,
                size(array_intersect(a.gs, b.gs))
                  / cast(a.sz + b.sz - size(array_intersect(a.gs, b.gs))
                         AS double) AS j
-        FROM yield_cand_mat c
+        FROM {cand} c
         JOIN docsets a ON a.doc_id = c.doc_a
         JOIN docsets b ON b.doc_id = c.doc_b
         WHERE size(array_intersect(a.gs, b.gs))
                 / cast(a.sz + b.sz - size(array_intersect(a.gs, b.gs))
                        AS double) >= 0.5
-    """).localCheckpoint(eager=True)
-    jac.createOrReplaceTempView("yield_jac_mat")
-    return spark.sql(
-        _yield_sql(
-            "spark",
-            jac_src="yield_jac_mat",
-            toks_src="yield_toks_mat",
-        )
-    )
+    """), eager=True)
+    return spark.sql(_yield_sql("spark", jac_src=jac, toks_src=toks))

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.text import shingles_sql, words_sql
-from ..sources.tables import load_table, maybe_rebalance
+from ..sources.tables import load_table, materialize, maybe_rebalance
 from .registry import register
 
 
@@ -381,30 +381,28 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregation and the kept-rows join side); the r12 stage profile
     # showed both racing the full explode (18.0 + 25.6 executor-seconds
     # pre-checkpoint), so it is materialized once too
-    sh = spark.sql(
+    sh = materialize(spark.sql(
         f"WITH docs AS (SELECT doc_id, text FROM documents) "
         f"SELECT doc_id, explode({grams}) AS g FROM docs"
-    ).localCheckpoint(eager=True)
-    sh.createOrReplaceTempView("mhe_sh_mat")
+    ), eager=True)
     hd = spark.sql(f"""
-WITH df AS (SELECT g, count(*) AS n_docs FROM mhe_sh_mat GROUP BY g),
+WITH df AS (SELECT g, count(*) AS n_docs FROM {sh} GROUP BY g),
 corpus AS (SELECT count(*) AS n FROM documents),
 keep AS (
     SELECT g FROM df CROSS JOIN corpus
     WHERE n_docs * {_ME_DF_MULT} <= n AND n_docs <= {_ME_DF_ABS}
 )
 SELECT sh.doc_id, {h1} AS h1, {h2} AS h2
-FROM mhe_sh_mat sh JOIN keep ON sh.g = keep.g
+FROM {sh} sh JOIN keep ON sh.g = keep.g
 """)
     # localCheckpoint, not persist: the consumer query's four subtrees
     # (sigw, sizes, both pair-join sides) become runnable stages
     # CONCURRENTLY, and the r12 stage profile showed each of them
     # recomputing the full explode+md5+conv pipeline (18.5 + 10.9 +
     # 10.7 executor-seconds for one 5.5 MB table) — the persist's cache
-    # entry was not substituted into the executed consumer plan (the
-    # temp-view/CacheManager plan-matching path is invalidated by the
-    # per-call createOrReplaceTempView churn). An eager localCheckpoint
-    # materializes ONCE, and consumers reference the checkpointed
-    # blocks structurally (LogicalRDD) — no plan matching to miss.
-    hd.localCheckpoint(eager=True).createOrReplaceTempView("mhe_hd_mat")
-    return spark.sql(_mh_err_sql("spark", shf_src="mhe_hd_mat"))
+    # entry was not substituted into the executed consumer plan. An
+    # eager localCheckpoint materializes ONCE, and consumers reference
+    # the checkpointed blocks structurally (LogicalRDD) — no plan
+    # matching to miss.
+    hd = materialize(hd, eager=True)
+    return spark.sql(_mh_err_sql("spark", shf_src=hd))

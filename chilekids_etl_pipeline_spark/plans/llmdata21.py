@@ -43,9 +43,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.tables import (
+    above_size_gate,
     load_table,
+    materialize,
     maybe_rebalance,
-    plan_size_bytes,
     rebalance_if_big,
 )
 from .llmdata20 import (
@@ -272,35 +273,26 @@ def ann_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vector and costs more than the freed parallelism at gate-scale
     # (AB_r12_ivfpq_revert.json). Above the gate the rebalance fires anyway.
     emb = load_table(spark, sf_dir, "embeddings")
-    rebalance_if_big(emb, min_bytes=2 << 20).createOrReplaceTempView(
-        "embeddings"
-    )
+    rebalance_if_big(emb).createOrReplaceTempView("embeddings")
     # Size-gated materialization of the two windowed pipelines the
     # template references twice each (r12, guide §2.4): `assign` (n x
     # k-centroid cosine window — consumed by cells AND probes) and
     # `codes` (n x 128 codeword L2 window — consumed by adc AND pqn)
     # otherwise re-plan and re-run per reference; with the base scans
     # below them, embeddings was scanned 14 times in one plan. The gate
-    # is the SAME 2 MB plan-size break-even as the rebalance above, and
-    # for the same reason, measured both ways: at sf0.1 the eager
-    # checkpoints serialize two jobs ahead of a query whose duplicated
-    # subtrees otherwise race across idle cores (+1.02 s median, 5/5
-    # rounds, AB_r12_ivfpq_seam_sf01.json), while at sf1 the deduped
-    # windows dominate (−0.47 s median, AB_r12_ivfpq_seam_sf1.json) and
-    # the gap grows with n (the n x k window is the asymptotic cost).
-    if (plan_size_bytes(emb) or 0) >= 2 << 20:
-        spark.sql(_pq_sql("spark", emit="assign")).localCheckpoint(
-            eager=True
-        ).createOrReplaceTempView("pq_assign_mat")
-        spark.sql(_pq_sql("spark", emit="codes")).localCheckpoint(
-            eager=True
-        ).createOrReplaceTempView("pq_codes_mat")
-        return spark.sql(
-            _pq_sql(
-                "spark", assign_src="pq_assign_mat", codes_src="pq_codes_mat"
-            )
-        )
-    return spark.sql(_pq_sql("spark"))
+    # is the one plan-size break-even the rebalance above reads too, and
+    # each side wins on its own scale (4 cores, 5 alternating pairs,
+    # medians): at sf0.1 the eager checkpoints serialize two jobs ahead
+    # of a query whose duplicated subtrees otherwise race across idle
+    # cores (inline 2.53 s, checkpointed 3.06 s), while at sf1 the
+    # deduped windows dominate (checkpointed 10.72 s, inline 12.79 s)
+    # and the gap grows with n (the n x k window is the asymptotic
+    # cost).
+    if not above_size_gate(emb):
+        return spark.sql(_pq_sql("spark"))
+    assign = materialize(spark.sql(_pq_sql("spark", emit="assign")), eager=True)
+    codes = materialize(spark.sql(_pq_sql("spark", emit="codes")), eager=True)
+    return spark.sql(_pq_sql("spark", assign_src=assign, codes_src=codes))
 
 
 # ---------------------------------------------------------------------------
@@ -458,20 +450,19 @@ def minhash_bbit_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # kept-rows join side of the hd build — materialized once, like
     # llmdata20.minhash_estimate_error (r12: the two subtrees raced the
     # full explode pre-checkpoint)
-    sh = spark.sql(
+    sh = materialize(spark.sql(
         f"WITH docs AS (SELECT doc_id, text FROM documents) "
         f"SELECT doc_id, explode({grams}) AS g FROM docs"
-    ).localCheckpoint(eager=True)
-    sh.createOrReplaceTempView("bbit_sh_mat")
+    ), eager=True)
     hd = spark.sql(f"""
-WITH df AS (SELECT g, count(*) AS n_docs FROM bbit_sh_mat GROUP BY g),
+WITH df AS (SELECT g, count(*) AS n_docs FROM {sh} GROUP BY g),
 corpus AS (SELECT count(*) AS n FROM documents),
 keep AS (
     SELECT g FROM df CROSS JOIN corpus
     WHERE n_docs * {_ME_DF_MULT} <= n AND n_docs <= {_ME_DF_ABS}
 )
 SELECT sh.doc_id, {h1} AS h1, {h2} AS h2
-FROM bbit_sh_mat sh JOIN keep ON sh.g = keep.g
+FROM {sh} sh JOIN keep ON sh.g = keep.g
 """)
     # eager localCheckpoint, not persist: the consumer's subtrees (sigw,
     # sizes, both pair-join sides) run as CONCURRENT stages and each
@@ -479,5 +470,5 @@ FROM bbit_sh_mat sh JOIN keep ON sh.g = keep.g
     # (r12 stage profile: 16.4 + 12.1 + 11.2 executor-seconds); the
     # checkpointed blocks are referenced structurally, so the pipeline
     # runs exactly once (see llmdata20.minhash_estimate_error).
-    hd.localCheckpoint(eager=True).createOrReplaceTempView("bbit_hd_mat")
-    return spark.sql(_bbit_sql("spark", shf_src="bbit_hd_mat"))
+    hd = materialize(hd, eager=True)
+    return spark.sql(_bbit_sql("spark", shf_src=hd))

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import stop_hits_sql, words_sql
-from ..sources.tables import load_table, maybe_rebalance
+from ..sources.tables import load_table, materialize, maybe_rebalance
 from ..functions.contamination import bench_grams_cte as _bench_grams_cte
 from .registry import register
 
@@ -693,9 +693,8 @@ def training_data_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # task (at cluster scale, file layout provides this)
     # lazy persist (eager localCheckpoint A/B-measured slower here,
     # AB_r12_batch2 — racing recomputes overlap; see dedup_minhash_lsh)
-    dedup = maybe_rebalance(spark.sql(_pipeline_dedup_sql("spark"))).persist()
-    dedup.createOrReplaceTempView("dedup_docs")
-    return spark.sql(_pipeline_rest_sql("spark", "dedup_docs"))
+    dedup = materialize(maybe_rebalance(spark.sql(_pipeline_dedup_sql("spark"))))
+    return spark.sql(_pipeline_rest_sql("spark", dedup))
 
 
 # ---------------------------------------------------------------------------
@@ -821,9 +820,9 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit = _docs_aug_spark(spark, sf_dir).filter(
         (F.col("doc_id") % PLANT_SENTINEL) % _RECALL_SAMPLE_DENOM == 0
     )
-    sh = drop_hot_shingles(
-        shingle_rows(audit), df_cap_abs=_recall_df_cap()
-    ).persist()
+    sh = spark.table(materialize(
+        drop_hot_shingles(shingle_rows(audit), df_cap_abs=_recall_df_cap())
+    ))
     exact = jaccard_pairs(sh, 0.5).select("doc_a", "doc_b")
     cand = lsh_candidate_pairs(minhash_bands(sh, num_hashes=12, band_size=3))
     hits = exact.join(cand, ["doc_a", "doc_b"])

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import bpe_token_count_sql, shingles_sql, words_sql
-from ..sources.tables import load_table, maybe_rebalance
+from ..sources.tables import load_table, materialize, maybe_rebalance
 from .registry import register
 
 
@@ -178,16 +178,15 @@ def split_leakage_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = maybe_rebalance(load_table(spark, sf_dir, "documents"))
     docs.createOrReplaceTempView("documents")
     grams_expr = shingles_sql("spark", words_sql("spark"), _LEAK_N)
-    grams = spark.sql(
-        f"SELECT doc_id, explode({grams_expr}) AS g FROM documents"
-    )
     # lazy persist, deliberately: an eager localCheckpoint A/B-measured
     # +1.29 s median here (AB_r12_batch2) — the racing consumer
     # recomputes overlap across cores and beat serialized
     # materialization (contrast minhash_estimate_error, where the
     # duplicated md5+conv work dominated and the checkpoint won).
-    grams.persist().createOrReplaceTempView("leak_grams_mat")
-    return spark.sql(_leakage_sql("spark", grams_src="leak_grams_mat"))
+    grams = materialize(spark.sql(
+        f"SELECT doc_id, explode({grams_expr}) AS g FROM documents"
+    ))
+    return spark.sql(_leakage_sql("spark", grams_src=grams))
 
 
 # ---------------------------------------------------------------------------
@@ -353,10 +352,9 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # AND the cell-vector join as concurrent stages (cache race — see
     # llmdata20.minhash_estimate_error); the checkpointed df is used for
     # BOTH consumers so they share the materialized blocks.
-    norms = spark.sql(_sem_norms_sql("spark")).localCheckpoint(eager=True)
-    norms.createOrReplaceTempView("sem_norms_mat")
-    cells = spark.sql(_sem_cells_sql("spark", norms_src="sem_norms_mat"))
-    cellvecs = norms.join(cells, "vec_id")
+    norms = materialize(spark.sql(_sem_norms_sql("spark")), eager=True)
+    cells = spark.sql(_sem_cells_sql("spark", norms_src=norms))
+    cellvecs = spark.table(norms).join(cells, "vec_id")
     thr = _SEM_THRESHOLD
 
     def _empty_pairs() -> pd.DataFrame:
@@ -521,13 +519,12 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = maybe_rebalance(load_table(spark, sf_dir, "documents"))
     docs.createOrReplaceTempView("documents")
     grams_expr = shingles_sql("spark", words_sql("spark"), _NOVELTY_N)
-    grams = spark.sql(
-        f"SELECT doc_id, explode({grams_expr}) AS g FROM documents"
-    )
     # lazy persist: eager localCheckpoint A/B-measured +0.56 s median
     # (AB_r12_batch2, same verdict as split_leakage_check)
-    grams.persist().createOrReplaceTempView("novelty_grams_mat")
-    return spark.sql(_novelty_sql("spark", grams_src="novelty_grams_mat"))
+    grams = materialize(spark.sql(
+        f"SELECT doc_id, explode({grams_expr}) AS g FROM documents"
+    ))
+    return spark.sql(_novelty_sql("spark", grams_src=grams))
 
 
 # ---------------------------------------------------------------------------

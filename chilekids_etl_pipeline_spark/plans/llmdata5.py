@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.text import shingles_sql, words_sql
-from ..sources.tables import load_table, maybe_rebalance
+from ..sources.tables import load_table, materialize, maybe_rebalance
 from .registry import register
 
 
@@ -68,18 +68,14 @@ def _contain_docs_cte(dialect: str) -> str:
 """
 
 
-def _containment_sql(
-    dialect: str, sh_src: str | None = None, shf_src: str | None = None
-) -> str:
+def _containment_sql(dialect: str, sh_src: str | None = None) -> str:
     """Containment C = |A∩B| / min(|A|,|B|) over stop-gram-filtered
     distinct shingle sets. Jaccard misses a short document embedded in a
     long one (union dominates); containment is the detector for quote
     farms / boilerplate wrappers / prefix crawls. sh_src lets the Spark
     side substitute a persisted shingle table (the CTE is referenced by
     the df filter, both pair sides, and the size table — inlining would
-    shingle the corpus four times). shf_src substitutes the df-capped
-    table re-keyed to a dense integer gid (see minhash_containment) —
-    the sizes/common tail is key-type agnostic."""
+    shingle the corpus four times)."""
     grams = shingles_sql(dialect, words_sql(dialect), _CONTAIN_N)
     ex = "explode" if dialect == "spark" else "unnest"
     sh_body = (
@@ -87,11 +83,7 @@ def _containment_sql(
         if sh_src
         else f"SELECT doc_id, {ex}({grams}) AS g FROM docs"
     )
-    head = (
-        f"""
-WITH shf AS (SELECT doc_id, g FROM {shf_src}),"""
-        if shf_src
-        else f"""
+    return f"""
 WITH docs AS ({_contain_docs_cte(dialect)}),
 sh AS ({sh_body}),
 df AS (SELECT g, count(*) AS n_docs FROM sh GROUP BY g),
@@ -100,9 +92,7 @@ keep AS (
     SELECT g FROM df CROSS JOIN corpus
     WHERE n_docs * {_CONTAIN_DF_PCT} <= n AND n_docs <= {_CONTAIN_DF_ABS}
 ),
-shf AS (SELECT sh.doc_id, sh.g FROM sh JOIN keep ON sh.g = keep.g),"""
-    )
-    return f"""{head}
+shf AS (SELECT sh.doc_id, sh.g FROM sh JOIN keep ON sh.g = keep.g),
 sizes AS (SELECT doc_id, count(*) AS n FROM shf GROUP BY doc_id),
 common AS (
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
@@ -140,24 +130,18 @@ def minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = maybe_rebalance(load_table(spark, sf_dir, "documents"))
     docs.createOrReplaceTempView("documents")
     grams_expr = shingles_sql("spark", words_sql("spark"), _CONTAIN_N)
-    sh = spark.sql(
-        f"WITH docs AS ({_contain_docs_cte('spark')}) "
-        f"SELECT doc_id, explode({grams_expr}) AS g FROM docs"
-    )
     # eager localCheckpoint, not persist: the four sh consumers run as
     # CONCURRENT stages of one job and each raced the not-yet-built
     # cache into a full re-shingle (r12 stage profile: 23.8 + 10.3
     # executor-seconds duplicated); checkpointed blocks are referenced
-    # structurally, so the explode runs once.
-    sh.localCheckpoint(eager=True).createOrReplaceTempView("contain_sh_mat")
-    # r13: the dense-integer re-key of the pair join (the shf_src seam
-    # below) was built and A/B-REVERTED on similarity_histogram — the
-    # structurally identical twin — wash at sf0.1, +0.94 s at sf1
-    # (AB_r13_batch1{,_sf1}.json): the string→gid map join + vocab
-    # window costs what the integer self-join saves, because the
-    # self-join's string exchanges are already ReusedExchange-shared.
-    # See similarity_histogram's comment for the full adjudication.
-    return spark.sql(_containment_sql("spark", sh_src="contain_sh_mat"))
+    # structurally, so the explode runs once. The pair join stays on the
+    # shingle strings: see similarity_histogram's comment for why a
+    # dense-integer re-key does not pay.
+    sh = materialize(spark.sql(
+        f"WITH docs AS ({_contain_docs_cte('spark')}) "
+        f"SELECT doc_id, explode({grams_expr}) AS g FROM docs"
+    ), eager=True)
+    return spark.sql(_containment_sql("spark", sh_src=sh))
 
 
 # ---------------------------------------------------------------------------

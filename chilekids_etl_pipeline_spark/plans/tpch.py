@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from ..sources.tables import load_table
+from ..sources.tables import load_table, materialize
 from .registry import register
 
 # ---------------------------------------------------------------------------
@@ -891,16 +891,15 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("s_suppkey")
     )
-    val = (
+    # referenced twice (threshold scalar + filter side); persisting the
+    # small per-part aggregate stops the lineitem scan + double
+    # aggregation from running twice — same idiom as the persisted
+    # shingle table in dedup_minhash_lsh
+    val = spark.table(materialize(
         ps.join(broadcast(sup), ps.ps_suppkey == F.col("s_suppkey"))
         .groupBy("ps_partkey")
         .agg(F.sum("ps_value").alias("part_value_dec"))
-        # referenced twice (threshold scalar + filter side); persisting the
-        # small per-part aggregate stops the lineitem scan + double
-        # aggregation from running twice — same idiom as the persisted
-        # shingle table in dedup_minhash_lsh
-        .persist()
-    )
+    ))
     thresh = val.agg(
         (
             F.lit(1.5) * F.sum("part_value_dec").cast("double") / F.count(F.lit(1))

@@ -44,13 +44,22 @@ RUNTIME_CONFS = {
 
 
 def ensure_session_confs(spark: SparkSession) -> SparkSession:
-    """Apply the runtime-critical confs to an externally-built session."""
+    """Prepare a session for one catalog call; the query registry's
+    wrapper calls this at the start of every registered call.
+
+    Applies the runtime-critical confs to an externally-built session,
+    and ends the previous call's intermediates: the caches and views
+    ``sources.tables.materialize`` made are released here, so an
+    intermediate lives for one query."""
+    from .sources.tables import release_materialized
+
     for k, v in RUNTIME_CONFS.items():
         try:
             if spark.conf.get(k, None) != v:
                 spark.conf.set(k, v)
         except Exception:
             pass  # static conf on this build — session.py already sets it
+    release_materialized(spark)
     return spark
 
 

@@ -503,12 +503,13 @@ def test_rebalance_gate_auto_widens_local_scan(spark):
         spark.conf.set(REBALANCE_CONF, "auto")
 
 
-def test_rebalance_if_big_gates_on_scan_bytes(spark):
-    """Round-10 size gate: below min_bytes the widening exchange must NOT
-    be planned (it is pure stage-barrier loss on thin inputs — the r10
-    A/B priced it at +0.3-0.6 s per entry at sf0.1), above it the
+def test_rebalance_if_big_gates_on_scan_bytes(spark, monkeypatch):
+    """Round-10 size gate: below SIZE_GATE_BYTES the widening exchange
+    must NOT be planned (it is pure stage-barrier loss on thin inputs —
+    the r10 A/B priced it at +0.3-0.6 s per entry at sf0.1), above it the
     behavior is exactly maybe_rebalance. The threshold compares the
     relation's plan-time file-size estimate, so no job runs either way."""
+    from chilekids_etl_pipeline_spark.sources import tables
     from chilekids_etl_pipeline_spark.sources.tables import (
         REBALANCE_CONF,
         load_table,
@@ -518,21 +519,17 @@ def test_rebalance_if_big_gates_on_scan_bytes(spark):
     spark.conf.set(REBALANCE_CONF, "auto")
     small = load_table(spark, SF_SMALL, "lineitem")
     # a huge threshold: the scan is "too small", no exchange
-    assert "RoundRobinPartitioning" not in _plan(
-        rebalance_if_big(small, min_bytes=1 << 40)
-    )
+    monkeypatch.setattr(tables, "SIZE_GATE_BYTES", 1 << 40)
+    assert "RoundRobinPartitioning" not in _plan(rebalance_if_big(small))
     # a zero threshold: delegates to maybe_rebalance, which widens the
     # under-parallel local scan
-    assert "RoundRobinPartitioning" in _plan(
-        rebalance_if_big(small, min_bytes=0)
-    )
+    monkeypatch.setattr(tables, "SIZE_GATE_BYTES", 0)
+    assert "RoundRobinPartitioning" in _plan(rebalance_if_big(small))
     # the off conf still pins production plans Exchange-free even when
     # the size gate passes
     spark.conf.set(REBALANCE_CONF, "off")
     try:
-        assert "RoundRobinPartitioning" not in _plan(
-            rebalance_if_big(small, min_bytes=0)
-        )
+        assert "RoundRobinPartitioning" not in _plan(rebalance_if_big(small))
     finally:
         spark.conf.set(REBALANCE_CONF, "auto")
 

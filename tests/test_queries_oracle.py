@@ -22,9 +22,6 @@ QUERIES, ORACLES = _catalog()
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(spark, duck, name):
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from tools.check import value_hash
 
     sdf = QUERIES[name](spark, SF_SMALL).toPandas()

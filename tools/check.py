@@ -32,6 +32,8 @@ import sys
 import duckdb
 import pandas as pd
 
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 # query -> SQL predicate over its OUTPUT columns, valid in both dialects;
 # 1-in-20 keeps the sf1 stratum ~300k rows (DuckDB fetches it in ~30s
@@ -109,7 +111,7 @@ def main() -> int:
     only = set(sys.argv[2:])
     per_query_timeout = float(os.environ.get("CHECK_QUERY_TIMEOUT", "0"))
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO_ROOT)
     import __spark_entry__ as entry_mod
     from chilekids_etl_pipeline_spark.session import get_spark
 

@@ -24,6 +24,8 @@ import os
 import sys
 import time
 
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 DEFAULT_QUERIES = [
     "staging_records",
     "streaming_sessionize_replay",
@@ -55,7 +57,7 @@ def main() -> int:
     args = ap.parse_args()
     names = args.queries or DEFAULT_QUERIES
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO_ROOT)
     import __spark_entry__ as entry_mod
     from chilekids_etl_pipeline_spark.session import get_spark
 

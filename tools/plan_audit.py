@@ -17,8 +17,11 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import re
 import sys
+
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def audit_plan(plan: str) -> dict:
@@ -47,7 +50,7 @@ def main() -> int:
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO_ROOT)
     import __spark_entry__ as entry_mod
     from chilekids_etl_pipeline_spark.session import get_spark
 

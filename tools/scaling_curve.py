@@ -28,8 +28,11 @@ from __future__ import annotations
 import argparse
 import json
 import math
+import os
 import sys
 import time
+
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 QUERIES = [
     "staging_records",
@@ -73,7 +76,7 @@ def main() -> int:
     if args.queries:
         QUERIES = args.queries
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO_ROOT)
     import __spark_entry__ as entry_mod
     from chilekids_etl_pipeline_spark.session import get_spark
 

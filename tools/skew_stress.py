@@ -29,9 +29,12 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import statistics
 import sys
 import time
+
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> int:
@@ -43,7 +46,7 @@ def main() -> int:
                     help="share of rows planted on the single hot key")
     args = ap.parse_args()
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO_ROOT)
     from pyspark.sql import functions as F
 
     from chilekids_etl_pipeline_spark.operators.skew import salted_agg
