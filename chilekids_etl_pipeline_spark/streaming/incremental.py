@@ -138,6 +138,9 @@ def merge_upsert_batch(
         shutil.rmtree(tmp, ignore_errors=True)
         cur = applied = None
         if os.path.exists(target_dir):
+            # schema inferred, not taken from the batch: callers pass
+            # batches of their own shapes, and the unionByName below
+            # raises when the target's columns do not match them
             cur = spark.read.parquet(target_dir)
             if "_sink_id" not in cur.columns:  # pre-sink_id target layout
                 cur = cur.withColumn("_sink_id", F.lit(sink_id))

@@ -8,6 +8,8 @@ last-write-wins upsert), checked without a second implementation:
 - ``--test`` takes the first ``TEST_LIMIT`` changed rows in
   ``(extracted_at, id)`` order;
 - a failing upsert leaves no relation pinned in the session;
+- the merge reads the pinned delta instead of recomputing it;
+- a raw directory written without ``extracted_at`` is stamped at run time;
 - one warm load + incremental batch stays within its Spark job budget.
 """
 
@@ -169,13 +171,105 @@ def test_failed_upsert_releases_persisted_relations(spark, tmp_path,
     assert pinned().size() == before
 
 
-# Spark jobs of one warm batch on the fixture below: load 4 (raw schema,
-# id semi-join collect 2, append 1), incremental ELT 17 (raw, staging and
-# quarantine schema 3; the one aggregate over the normalized delta 5;
-# quarantine append 1; merge: target schema 1, max(_batch_id) 2, rewrite 5).
-# The count repeats exactly run to run, so a job that creeps back into the
-# per-batch path fails this test.
-JOB_BUDGET = 21
+def _jobs_of(spark, action, tag: str) -> int:
+    """Number of Spark jobs ``action()`` launches."""
+    sc = spark.sparkContext
+    group = f"elt-{tag}-{os.getpid()}"
+    sc.setJobGroup(group, tag)
+    try:
+        action()
+    finally:
+        sc._jsc.clearJobGroup()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_merge_reads_the_pinned_delta(spark, tmp_path, monkeypatch):
+    # A warm batch that quarantines a row (r5): the pinned plan reads the
+    # quarantine directory as a seen relation, so a quarantine append
+    # before the merge would clear the pin, and counting the merge's input
+    # would re-run the raw scan, both anti-joins and the normalization.
+    from pyspark.sql import functions as F
+
+    from chilekids_etl_pipeline_spark.streaming import incremental
+
+    raw, staging = str(tmp_path / "raw"), str(tmp_path / "staging")
+    run_load_sheets("S", "R", values_json=_sheet(tmp_path, "a", SHEET_A),
+                    raw_dir=raw)
+    assert run_incremental_elt(raw, staging) == 3
+    run_load_sheets("S", "R", values_json=_sheet(tmp_path, "b", SHEET_B),
+                    raw_dir=raw)
+
+    merge_factory = incremental.merge_upsert_batch
+    jobs = {}
+
+    def checking_merge_factory(*args, **kwargs):
+        merge = merge_factory(*args, **kwargs)
+
+        def checking_merge(batch, batch_id):
+            # the batch first: reading anything else could refill the pin
+            jobs["batch"] = _jobs_of(spark, batch.count, "pinned-delta")
+            fresh = spark.range(0, 8, 1, 4).persist()
+            try:
+                fresh.count()
+                jobs["cached"] = _jobs_of(
+                    spark, fresh.filter(F.col("id") >= 0).count, "cached")
+            finally:
+                fresh.unpersist()
+            return merge(batch, batch_id)
+
+        return checking_merge
+
+    monkeypatch.setattr(incremental, "merge_upsert_batch",
+                        checking_merge_factory)
+    assert run_incremental_elt(raw, staging) == 2
+    assert 0 < jobs["batch"] <= jobs["cached"], jobs
+    qcols = ["raw_id", "parse_failed_cols"]
+    assert _rows(spark, staging + "_quarantine", qcols) == [
+        ("r3", "total_rub"), ("r5", "total_rub")]
+
+
+def test_raw_without_extracted_at_is_stamped_at_run_time(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    from chilekids_etl_pipeline_spark.sources.sheets import (
+        records_to_raw_rows, values_to_records,
+    )
+
+    raw, staging = str(tmp_path / "raw"), str(tmp_path / "staging")
+    legacy = records_to_raw_rows(values_to_records([HEADER, *SHEET_A]),
+                                 "google_sheets")
+    spark.createDataFrame(
+        legacy, "id string, source string, payload string, payload_hash string"
+    ).write.parquet(raw)
+    # a later load appends files that do carry extracted_at
+    run_load_sheets("S", "R", values_json=_sheet(tmp_path, "b", SHEET_B),
+                    raw_dir=raw)
+    loaded = dict(_rows(spark, raw, ["id", "extracted_at"]))
+    assert {k for k, v in loaded.items() if v is None} == {r[0] for r in legacy}
+
+    def now():
+        return spark.range(1).select(F.current_timestamp()).first()[0]
+
+    t0 = now()
+    assert run_incremental_elt(raw, staging) == 5
+    t1 = now()
+    received = dict(_rows(spark, staging, ["raw_id", "received_at"]))
+    received.update(_rows(spark, staging + "_quarantine",
+                          ["raw_id", "received_at"]))
+    assert set(received) == set(loaded)
+    for raw_id, at in received.items():
+        if loaded[raw_id] is None:
+            assert t0 <= at <= t1, (raw_id, at)
+        else:
+            assert at == loaded[raw_id], raw_id
+
+
+# Spark jobs of one warm batch on the fixture below: load 3 (id semi-join
+# collect 2, append 1), incremental ELT 11 (the one aggregate over the
+# normalized delta 5; merge: target schema 1, max(_batch_id) 2, rewrite 2;
+# quarantine append 1). The count repeats exactly run to run, so a job that
+# creeps back into the per-batch path fails this test.
+JOB_BUDGET = 14
 
 
 def test_warm_batch_stays_within_job_budget(spark, tmp_path):
@@ -184,13 +278,9 @@ def test_warm_batch_stays_within_job_budget(spark, tmp_path):
                     raw_dir=raw)
     assert run_incremental_elt(raw, staging) == 3  # warm: every dir exists
     b = _sheet(tmp_path, "b", SHEET_B)
-    sc = spark.sparkContext
-    group = f"elt-job-budget-{os.getpid()}"
-    sc.setJobGroup(group, "one warm ELT batch")
-    try:
+
+    def batch():
         run_load_sheets("S", "R", values_json=b, raw_dir=raw)
         assert run_incremental_elt(raw, staging) == 2
-    finally:
-        sc._jsc.clearJobGroup()
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= JOB_BUDGET, sorted(jobs)
+
+    assert 0 < _jobs_of(spark, batch, "job-budget") <= JOB_BUDGET

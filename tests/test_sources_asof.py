@@ -45,6 +45,41 @@ def test_records_to_raw_df_explicit_and_fallback_ids(spark):
     assert df[1].payload_hash == df[2].payload_hash
 
 
+@pytest.mark.parametrize("records", [
+    [],
+    [{"id": "r-1", "Клиент": "ООО «Ромашка»", "Total RUB": "1\u00a0234,56 ₽"},
+     {"id": "r-2", "Категория": "Аренда\u00a0офиса", "v": "€ ¥ ₽"}],
+    [{"Client": "Acme", "v": "1"}, {"Client": "Acme", "v": "1"},
+     {"Client": "Ромашка", "v": "\u00a0"}],
+], ids=["empty", "non_ascii", "sheet_auto_ids"])
+def test_raw_rows_to_df_matches_the_row_list_path(spark, tmp_path, records):
+    """The Arrow-built raw frame has the schema and rows that
+    ``createDataFrame`` over the row tuples gives, in memory and as
+    written to a raw directory."""
+    from chilekids_etl_pipeline_spark.sources.sheets import (
+        RAW_COLS, RAW_SCHEMA, raw_rows_to_df, records_to_raw_rows,
+    )
+
+    rows = records_to_raw_rows(records, "google_sheets")
+    got = raw_rows_to_df(spark, rows)
+    want = spark.createDataFrame(
+        rows, "id string, source string, payload string, payload_hash string"
+    ).withColumn("extracted_at", F.current_timestamp())
+    assert got.schema == want.schema
+    cols = list(RAW_COLS)
+    assert sorted(got.select(*cols).collect()) == sorted(rows)
+    assert sorted(want.select(*cols).collect()) == sorted(rows)
+    assert all(r.extracted_at is not None for r in got.collect())
+
+    got.write.parquet(str(tmp_path / "arrow"))
+    want.write.parquet(str(tmp_path / "list"))
+    back = [spark.read.parquet(str(tmp_path / d)) for d in ("arrow", "list")]
+    assert back[0].schema == back[1].schema
+    assert back[0].schema.simpleString() == spark.read.schema(
+        RAW_SCHEMA).parquet(str(tmp_path / "arrow")).schema.simpleString()
+    assert sorted(back[0].select(*cols).collect()) == sorted(rows)
+
+
 def test_load_sheet_values_roundtrip(spark, tmp_path):
     payload = {"values": [["pk", "amount"], ["7", "(100)"], ["8", "€12,5"]]}
     p = tmp_path / "sheet.json"
